@@ -99,7 +99,7 @@ object ScaleProbe {
     if (args.contains("merge")
         && new java.io.File(s"$out/documents.parquet").exists()) {
       // re-measure the maintenance meter on an already-built replica
-      graft.queries.Dedup.clearCaches()
+      graft.core.Memo.clear()
       mergeMeter(spark, m, out); spark.stop(); return
     }
 
@@ -152,14 +152,6 @@ object ScaleProbe {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     println(s"""{"built": "$out", "docs": ${n * m}, "vectors": ${en * m}, "events": ${evn * m}}""")
-    // the corpus at `out` was just (re)written — drop any memoized
-    // indexes a previous run of this session may hold for the same path
-    graft.queries.Dedup.clearCaches()
-    graft.queries.Similarity.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
-    graft.queries.KvQueries.clearCaches()
-    graft.queries.Retrieval.clearCaches()
-    graft.queries.GraphRank.clearCaches()
 
     Seq("dedup_exact", "dedup_ngram_jaccard", "dedup_jaccard_prefix",
       "dedup_minhash_lsh", "dedup_incremental", "dedup_lsh_recall_sampled",
@@ -276,7 +268,6 @@ object ScaleProbe {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     println(s"""{"built": "$out", "vectors": ${en * m}}""")
-    graft.queries.Similarity.clearCaches()
 
     def meter(name: String, df: org.apache.spark.sql.DataFrame,
         fields: Seq[String]): Unit = {
@@ -349,7 +340,7 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
       println(s"""{"built": "$out", "docs": ${n * m}}""")
     }
-    graft.queries.Dedup.clearCaches()
+    graft.core.Memo.clear()
     // a THIN ingest slice in FEW batches: the probe measures STATE ROWS
     // per batch, and each micro-batch pays the full stream-static join
     // against the m× staged artifacts regardless of batch size — the
@@ -410,9 +401,6 @@ object ScaleProbe {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     println(s"""{"built": "$out", "docs": ${n * m}}""")
-    graft.queries.Dedup.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
-    graft.queries.Retrieval.clearCaches()
 
     Seq("dedup_exact", "dedup_simhash", "tx_fingerprint", "tx_tfidf",
       "tx_pack", "tx_mix", "tx_mix_temperature", "tx_curation_packed",
@@ -456,12 +444,6 @@ object ScaleProbe {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     println(s"""{"built": "$out", "docs": ${n * m}}""")
-    // the corpus at `out` was just (re)written — drop any staged media
-    // table a previous run of this session holds for the same path
-    // (and the token-count tables mm_pack joins against)
-    graft.multimodal.Multimodal.clearCaches()
-    graft.queries.MultimodalQueries.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
 
     // first query pays the one-time fixture encode (the staged media
     // table — production's stored corpus); the rest measure decode
@@ -503,8 +485,7 @@ object ScaleProbe {
     val out = s"/tmp/graft_scale${m}d"
     require(new java.io.File(s"$out/documents.parquet").exists(),
       s"run `ScaleProbe $m docs` first to build $out")
-    graft.queries.TextAnalysis.clearCaches()
-    graft.queries.Retrieval.clearCaches()
+    graft.core.Memo.clear()
     val t0 = System.nanoTime()
     val nq = graft.queries.Retrieval.bm25Scored(spark, out)
       .select($"qid").distinct().count()
@@ -577,9 +558,7 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
       println(s"""{"built": "$out", "docs": ${n * m}, "vectors": ${en * m}}""")
     }
-    graft.queries.Retrieval.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
-    graft.queries.Similarity.clearCaches()
+    graft.core.Memo.clear()
     // offline index builds timed APART from the serving pass they
     // enable (the ladder convention): the PQ chain (centroid training,
     // codebook, codes) and the lexical impact index are per-generation
@@ -639,9 +618,7 @@ object ScaleProbe {
     val out = s"/tmp/graft_scale${m}g"
     if (!new java.io.File(s"$out/documents.parquet").exists())
       buildGraphReplica(spark, m, out)
-    graft.queries.Dedup.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
-    graft.queries.GraphRank.clearCaches()
+    graft.core.Memo.clear()
     val names = Seq("gr_source_graph", "gr_mirror_pairs", "gr_components",
       "gr_component_stats", "gr_source_rank", "gr_rank_gate",
       "gr_rank_sample", "gr_mirror_keep", "gr_triangles")
@@ -662,7 +639,7 @@ object ScaleProbe {
     val out = s"/tmp/graft_scale${m}g"
     if (!new java.io.File(s"$out/documents.parquet").exists())
       buildGraphReplica(spark, m, out)
-    graft.queries.Positional.clearCaches()
+    graft.core.Memo.clear()
     val tb = System.nanoTime()
     val nPostings = graft.queries.Positional.positionalIndex(spark, out).count()
     val buildSec = (System.nanoTime() - tb) / 1e9
@@ -801,7 +778,7 @@ object ScaleProbe {
   private def positionalWideProbe(spark: SparkSession, m: Int): Unit = {
     import spark.implicits._
     val out = ensureWideReplica(spark, m)
-    graft.queries.Positional.clearCaches()
+    graft.core.Memo.clear()
     val batch = org.apache.spark.sql.functions.col("doc_id") < 400L * 50
     val nq = math.max(
       graft.queries.Positional.probeQueryCount(spark, out, batch), 1L)
@@ -869,8 +846,7 @@ object ScaleProbe {
   private def hybridQlRecallProbe(spark: SparkSession): Unit = {
     import spark.implicits._
     val dir = "/root/testdata/sf0.1"
-    graft.queries.Retrieval.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     val ex = graft.queries.Retrieval.hybridQlExactFusedFrame(spark, dir)
       .select($"qid", $"doc_id").persist()
     val nEx = ex.count().toDouble
@@ -902,8 +878,7 @@ object ScaleProbe {
     val out = s"/tmp/graft_scale${m}d"
     require(new java.io.File(s"$out/documents.parquet").exists(),
       s"run `ScaleProbe $m docs` first to build $out")
-    graft.queries.TextAnalysis.clearCaches()
-    graft.queries.Retrieval.clearCaches()
+    graft.core.Memo.clear()
     // the EXACT tier (and the recall meter that needs it) only runs at
     // m ≤ 10: at 100× it is 10k queries × a full 500k-doc postings
     // traversal per query — the 5-billion-group plan the impact tier
@@ -961,8 +936,7 @@ object ScaleProbe {
     require(new java.io.File(s"$rep/documents.parquet").exists(),
       s"run `ScaleProbe $m docs` first to build $rep")
     for ((tag, dir) <- Seq(("1", base), (m.toString, rep))) {
-      graft.queries.Retrieval.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       val root = s"/tmp/graft_lexserve_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val tw0 = System.nanoTime()
@@ -1042,8 +1016,7 @@ object ScaleProbe {
   private def lexWideProbe(spark: SparkSession, m: Int): Unit = {
     import spark.implicits._
     val out = ensureWideReplica(spark, m)
-    graft.queries.Retrieval.clearCaches()
-    graft.queries.TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     val root = s"/tmp/graft_lexserve_w$m"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     val tw = System.nanoTime()
@@ -1106,9 +1079,7 @@ object ScaleProbe {
     if (!new java.io.File(s"$rep/documents.parquet").exists())
       buildGraphReplica(spark, m, rep)
     for ((tag, dir) <- Seq(("1", base), (m.toString, rep))) {
-      graft.queries.Dedup.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
-      graft.queries.GraphRank.clearCaches()
+      graft.core.Memo.clear()
       val root = s"/tmp/graft_gateserve_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val tw = System.nanoTime()
@@ -1136,7 +1107,7 @@ object ScaleProbe {
       println(f"""{"serve": "gate_admit", "mult": $tag, "batch_sec": $steady%.2f, "arrivals": ${arr.size}, "admitted": $admitted}""")
       // live budget cutover: republish (offline rank job, timed apart),
       // then the next batch pays only pointer + sources-sized reload
-      graft.queries.GraphRank.clearCaches()
+      graft.core.Memo.clear()
       graft.queries.GraphRank.writeGateGeneration(spark, dir, root)
       val flipSec = runBatch()
       println(f"""{"serve": "gate_flip", "mult": $tag, "batch_sec": $flipSec%.2f}""")
@@ -1197,7 +1168,7 @@ object ScaleProbe {
       println(s"""{"built": "$rep", "vectors": ${en * m}}""")
     }
     for ((tag, dir) <- Seq(("1", base), (m.toString, rep))) {
-      graft.queries.Similarity.clearCaches()
+      graft.core.Memo.clear()
       val centroids = graft.queries.Similarity.trainedCentroidArrays(spark, dir)
       val codebook = graft.queries.Similarity.pqCodebookArrays(spark, dir)
       val (nprobe, shortlist) = graft.queries.Similarity.pqServingDefaults

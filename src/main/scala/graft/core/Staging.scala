@@ -1,6 +1,7 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 
 import scala.util.control.NonFatal
 
@@ -20,8 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout: `$SPARK_GRAFT_STAGE_DIR/<corpus>-<fingerprint>/<artifact>`
   * (default root `/tmp/graft_stage`). The fingerprint folds in
-  *  - the absolute corpus dir and the (name, size, mtime) of every
-  *    source-table file the artifact derives from — the driver
+  *  - the absolute corpus dir and [[tableSignature]] — the (name, size,
+  *    mtime) of every file of the source tables the artifacts derive
+  *    from, the same generation rule the session memos ([[Memo]])
+  *    apply to every table of the corpus — the driver
   *    regenerates `/root/testdata` between rounds, and a stale index
   *    against fresh data must MISS, never hit;
   *  - [[Staging.FormatVersion]] — bumped whenever any derivation
@@ -68,32 +71,44 @@ object Staging {
     * slug plus a content fingerprint of the fingerprint tables.
     */
   private def generationDir(dir: String): (String, String) = {
-    val deps = FingerprintTables
     val abs = Paths.get(dir).toAbsolutePath.normalize.toString
     val slug = abs.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").take(80)
-    val sig = new StringBuilder(abs)
-    sig.append('|').append(FormatVersion)
-    deps.sorted.foreach { t =>
-      val p = Paths.get(abs, s"$t.parquet")
-      sig.append('|').append(t)
-      if (Files.exists(p)) {
-        // single file or directory-of-files: fold every regular file
-        val files =
-          if (Files.isDirectory(p))
-            withStream(Files.walk(p))(
-              _.filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString))
-          else Seq(p)
-        files.foreach { f =>
-          sig.append(':').append(f.getFileName).append(':')
-            .append(Files.size(f)).append(':')
-            .append(Files.getLastModifiedTime(f).toMillis)
-        }
-      } else sig.append(":absent")
-    }
+    val sig = s"$abs|$FormatVersion" + tableSignature(Paths.get(abs), FingerprintTables)
     val md = java.security.MessageDigest.getInstance("MD5")
-    val fp = md.digest(sig.toString.getBytes("UTF-8"))
+    val fp = md.digest(sig.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
     (slug, fp)
+  }
+
+  /** The corpus-generation rule shared by this store and the session
+    * memos ([[Memo]]): the (name, size, mtime) of every file of each
+    * named table under `dir`, in table-name order, with `:absent` for a
+    * missing table. One attribute read per single-file table; a
+    * directory-of-files table folds every regular file under it.
+    */
+  private[core] def tableSignature(dir: Path, tables: Seq[String]): String = {
+    val sig = new StringBuilder
+    def attrs(p: Path) = Files.readAttributes(p, classOf[BasicFileAttributes])
+    tables.sorted.foreach { t =>
+      val p = dir.resolve(s"$t.parquet")
+      sig.append('|').append(t)
+      (try Some(attrs(p)) catch { case _: NoSuchFileException => None }) match {
+        case None => sig.append(":absent")
+        case Some(a) =>
+          val files =
+            if (a.isDirectory)
+              withStream(Files.walk(p))(
+                _.filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString)
+                  .map(f => f -> attrs(f)))
+            else Seq(p -> a)
+          files.foreach { case (f, fa) =>
+            sig.append(':').append(f.getFileName).append(':')
+              .append(fa.size).append(':')
+              .append(fa.lastModifiedTime.toMillis)
+          }
+      }
+    }
+    sig.toString
   }
 
   /** True iff the store already holds at least one committed artifact
@@ -114,7 +129,7 @@ object Staging {
     * stream — `Files.list`/`Files.walk` hold an open directory handle
     * until closed, and the bench calls [[isWarm]] once per invocation.
     */
-  private def withStream[A](s: java.util.stream.Stream[Path])(
+  private[core] def withStream[A](s: java.util.stream.Stream[Path])(
       f: Iterator[Path] => A): A = {
     import scala.jdk.CollectionConverters._
     try f(s.iterator().asScala) finally s.close()

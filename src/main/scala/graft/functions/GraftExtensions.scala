@@ -8,12 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.functions.GraftExtensions`) get the
   * library's native functions registered in the SQL function registry
-  * and the [[graft.plans.WindowTopKRewrite]] optimizer rule installed at
-  * session build — no per-session imperative registration.
+  * and its planner strategy installed at session build — no per-session
+  * imperative registration.
   *
   * This is the (c)-tier extension point of the build brief: functions
-  * via `injectFunction`, plan rewrites via `injectOptimizerRule`, and
-  * one whole-operator planner strategy via `injectPlannerStrategy` —
+  * via `injectFunction` and one whole-operator planner strategy via `injectPlannerStrategy` —
   * [[graft.plans.GraftStrategy]] maps the native as-of join's logical
   * node onto its streaming-merge physical operator
   * ([[graft.plans.AsofJoinExec]]), the one operator whose physical
@@ -26,7 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("fnv1a32"),
       new ExpressionInfo(classOf[Fnv1a32].getName, "fnv1a32"),
       (children: Seq[Expression]) => Fnv1a32(children.head)))
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
   }
 }

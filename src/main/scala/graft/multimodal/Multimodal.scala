@@ -347,11 +347,8 @@ object Multimodal {
     * its corpus per query — so the fixture encoder runs once and every
     * media query measures decode, not fixture synthesis.
     */
-  private val mediaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Dataset[MediaRecord]]
-
   def mediaTable(s: SparkSession, dir: String): Dataset[MediaRecord] =
-    mediaCache.getOrElseUpdate((s, dir), {
+    graft.core.Memo(s, dir, "Multimodal.media_table") {
       import s.implicits._
       // durable: the encoded payload bytes ARE the stored input corpus
       // of a production media pipeline — synthesize once per corpus
@@ -370,15 +367,10 @@ object Multimodal {
       }.repartition(s.sparkContext.defaultParallelism)
         .as[MediaRecord].persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  /** Drop the staged media tables (needed if a corpus dir is rewritten
-    * in-session — same contract as the Dedup/Similarity caches).
-    */
-  def clearCaches(): Unit = {
-    mediaCache.values.foreach(_.unpersist())
-    mediaCache.clear()
-  }
+  /** Drop and release this module's session memos ([[graft.core.Memo]]). */
+  def clearCaches(): Unit = graft.core.Memo.clear("Multimodal")
 
   /** Build the media table from `documents`: modality round-robin by
     * doc_id; every payload is a REAL decodable container — PNG bytes for

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.{Memo, Staging, Tables}
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, and embedding-cosine
@@ -82,11 +82,8 @@ object Dedup {
     * tokenize+hash front end — the staged-intermediate-reuse pattern a
     * production pipeline gets by writing the index once per corpus.
     */
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   private def shingleIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    indexCache.getOrElseUpdate((s, dir), buildShingleIndex(s, dir))
+    Memo(s, dir, "Dedup.shingle_index")(buildShingleIndex(s, dir))
 
   /** The staged df-filtered (doc_id, sh) exchange — shared with
     * [[GraphRank]]'s source-graph build so both families read ONE
@@ -95,22 +92,16 @@ object Dedup {
   private[graft] def shingleExchange(s: SparkSession, dir: String): DataFrame =
     shingleIndex(s, dir)._1
 
-  private val interCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Session-scoped memo of the persisted 5-token window index
     * (doc_id, pos, fp): the shared front end of the substring modality —
     * dedup_substring aggregates it by fp, dedup_spans additionally joins
     * the duplicated-fp set back against it. Without the memo each query
     * re-runs tokenize + window + hash over the full corpus; staged once
-    * per (session, corpus), like [[indexCache]]. (A production pipeline
+    * per (session, corpus), like [[shingleIndex]]. (A production pipeline
     * writes this index, the most reusable artifact of passage dedup.)
     */
-  private val windowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def windowIndex(s: SparkSession, dir: String): DataFrame =
-    windowCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.window_index") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "window_index", Seq("documents")) {
         Tables(s, dir).documents
@@ -120,19 +111,7 @@ object Dedup {
             posexplode(TextAnalysis.wordGrams($"toks", 5)).as(Seq("pos", "w")))
           .select($"doc_id", $"pos", substring(md5($"w"), 1, 16).as("fp"))
       }.persist()
-    })
-
-  /** Session-scoped memo of the CONVERGED near-dup cluster labels
-    * (doc_id, cluster_rep). Unlike the lazy staged indexes, the CC loop
-    * is a multi-round job (an action per round), so re-deriving it per
-    * consumer re-runs the whole iteration — dedup_clusters and
-    * dedup_drop_list share the one converged artifact instead, the same
-    * way a production pipeline writes cluster assignments once and fans
-    * decisions out from them. The final frame is localCheckpoint-
-    * materialized; [[clearCaches]] frees its blocks explicitly.
-    */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** The drop decisions (doc_id, cluster_rep, keep_id): per duplicate
     * cluster keep the best member (longest token count, ties to the
@@ -156,14 +135,23 @@ object Dedup {
       .select($"doc_id", $"cluster_rep", $"keep_id")
   }
 
-  /** Connected components over the Jaccard ≥ 0.8 near-dup graph via
+  /** Session-scoped memo of the CONVERGED near-dup cluster labels
+    * (doc_id, cluster_rep). Unlike the lazy staged indexes, the CC loop
+    * is a multi-round job (an action per round), so re-deriving it per
+    * consumer re-runs the whole iteration — dedup_clusters and
+    * dedup_drop_list share the one converged artifact instead, the same
+    * way a production pipeline writes cluster assignments once and fans
+    * decisions out from them. The final frame is localCheckpoint-
+    * materialized; releasing the memo frees its blocks explicitly.
+    *
+    * Connected components over the Jaccard ≥ 0.8 near-dup graph via
     * min-label propagation, run to a fixpoint. Each round is one shuffle
     * on the vertex id; convergence is checked with a scalar changed-count
     * per round (never data on the driver); rounds needed = graph
     * diameter, tiny for dup clusters.
     */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    clusterCache.getOrElseUpdate((s, dir), Staging.readElseBuild(
+    Memo(s, dir, "Dedup.cluster_labels")(Staging.readElseBuild(
       s, dir, "cluster_labels", Seq("documents")) {
       import s.implicits._
       val (_, sizes) = shingleIndex(s, dir)
@@ -203,7 +191,7 @@ object Dedup {
         throw new IllegalStateException(
           s"dedup_clusters did not converge in $maxRounds rounds")
       // cache the RAW checkpointed frame (analyzed plan = LogicalRDD):
-      // clearCaches frees blocks by matching that node, and a toDF
+      // memo release frees blocks by matching that node, and a toDF
       // rename on top would hide it behind a Project. (With staging
       // enabled the memoized frame is instead the parquet scan of the
       // staged labels — freeLocalCheckpoint no-ops on it, and the one
@@ -211,36 +199,8 @@ object Dedup {
       labels
     }).toDF("doc_id", "cluster_rep")
 
-  /** Drop and unpersist all memoized indexes — call if the files under a
-    * cached dir are rewritten within one session (the memo assumes
-    * immutable inputs, which holds for the read-only test tables).
-    */
-  def clearCaches(): Unit = {
-    indexCache.values.foreach { case (kept, _) => kept.unpersist() }
-    interCache.values.foreach(_.unpersist())
-    windowCache.values.foreach(_.unpersist())
-    prefixCache.values.foreach(_.unpersist())
-    prefixCandCache.values.foreach(_.unpersist())
-    prefixInterCache.values.foreach(_.unpersist())
-    bandCache.values.foreach(_.unpersist())
-    hotCache.values.foreach(_.unpersist())
-    setsCache.values.foreach(_.unpersist())
-    simhashCache.values.foreach(_.unpersist())
-    // cluster labels are localCheckpoint-backed: no live plan references
-    // them once the memo is dropped, so the blocks can be freed outright
-    clusterCache.values.foreach(org.apache.spark.sql.GraftBridge.freeLocalCheckpoint)
-    clusterCache.clear()
-    indexCache.clear()
-    interCache.clear()
-    windowCache.clear()
-    prefixCache.clear()
-    prefixCandCache.clear()
-    prefixInterCache.clear()
-    bandCache.clear()
-    hotCache.clear()
-    setsCache.clear()
-    simhashCache.clear()
-  }
+  /** Drop and release this module's session memos ([[Memo]]). */
+  def clearCaches(): Unit = Memo.clear("Dedup")
 
   /** Anchor-sampling modulus for dedup_lsh_recall_sampled: 1-in-m docs
     * anchor the exact side, m chosen so ~[[LshSampleTarget]] anchors
@@ -251,11 +211,8 @@ object Dedup {
     * from the same count with a scalar subquery.
     */
   private val LshSampleTarget = 500L
-  private val docCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def lshSampleModulus(s: SparkSession, dir: String): Long = {
-    val n = docCountCache.getOrElseUpdate((s, dir),
-      Tables(s, dir).documents.count())
+    val n = Memo(s, dir, "Dedup.doc_count")(Tables(s, dir).documents.count())
     math.max(4L, (n + LshSampleTarget - 1) / LshSampleTarget)
   }
 
@@ -287,7 +244,7 @@ object Dedup {
     * family, reused by jaccard, minhash verification, and clustering.
     */
   private def interIndex(s: SparkSession, dir: String): DataFrame =
-    interCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.inter_index") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "inter_index", Seq("documents")) {
         val (kept, _) = shingleIndex(s, dir)
@@ -297,7 +254,7 @@ object Dedup {
           .agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("inter"))
       }.persist()
-    })
+    }
 
   /** Session-scoped memo of the MinHash band index (doc_id, band, key):
     * 12 codegen'd permutation minima per doc (one HashAggregate with
@@ -308,11 +265,8 @@ object Dedup {
     * treats its existing-corpus subset as the stored index a new batch
     * probes — the index build is paid once, not per batch.
     */
-  private val bandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def minhashBandIndex(s: SparkSession, dir: String): DataFrame =
-    bandCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.band_index") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "band_index", Seq("documents")) {
         val (kept, _) = shingleIndex(s, dir)
@@ -335,7 +289,7 @@ object Dedup {
                 element_at($"m", b * 3 + 3)).as("key")))).as("bk"))
           .select($"doc_id", $"bk.band", $"bk.key")
       }.persist()
-    })
+    }
 
   /** Publish the MinHash band index as a committed serving generation:
     * `gen-N/bands` under `root`, `_latest` flipped atomically
@@ -469,17 +423,14 @@ object Dedup {
     * ([[hotShingleList]]), which must apply the SAME filter or their
     * shingle sets drift from the index.
     */
-  private val hotCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def hotShingles(s: SparkSession, dir: String): DataFrame =
-    hotCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.hot_shingles") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "hot_shingles", Seq("documents")) {
         docShingles(s, dir).groupBy($"sh").count()
           .filter($"count" > MaxDf).select($"sh")
       }.persist()
-    })
+    }
 
   private[graft] def hotShingleList(s: SparkSession, dir: String): Array[String] =
     hotShingles(s, dir).collect().map(_.getString(0)).sorted
@@ -510,18 +461,15 @@ object Dedup {
     * view of the staged shingle index, the static side a streaming
     * ingest's per-row exact-Jaccard verifier joins against.
     */
-  private val setsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def keptSets(s: SparkSession, dir: String): DataFrame =
-    setsCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.kept_sets") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "kept_sets", Seq("documents")) {
         val (kept, _) = shingleIndex(s, dir)
         kept.groupBy($"doc_id")
           .agg(collect_list($"sh").as("shs"), count(lit(1)).as("n_sh"))
       }.persist()
-    })
+    }
 
   // ---- Incremental index MAINTENANCE (the write half of the ingest ----
   // loop: dedup_incremental / DedupStream are the read half). Each
@@ -1127,19 +1075,16 @@ object Dedup {
     * — consumed on BOTH sides of the candidate self-join (and by the
     * meter query); without it the tokenize+df+rank front end runs once
     * per join side. The staged artifact of the prefix-filter family,
-    * like [[indexCache]]/[[windowCache]].
-    */
-  private val prefixCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The prefix index: per doc, the first n_sh − ⌈0.8·n_sh⌉ + 1 kept
+    * like [[shingleIndex]]/[[windowIndex]].
+    *
+    * The prefix index: per doc, the first n_sh − ⌈0.8·n_sh⌉ + 1 kept
     * shingles under the global (document frequency asc, shingle asc)
     * order. ⌈4n/5⌉ = (4n + 4) div 5 — integral. One window function
     * partitioned by doc_id (per-doc state only; parallelizes across
     * docs at scale exactly like dedup_spans' island merge).
     */
   private def prefixIndex(s: SparkSession, dir: String): DataFrame =
-    prefixCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.prefix_index") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "prefix_index", Seq("documents")) {
         val (kept, sizes) = shingleIndex(s, dir)
@@ -1153,7 +1098,7 @@ object Dedup {
             s"($PrefT_num * n_sh + ${PrefT_den - 1}) div $PrefT_den") + 1)
           .select($"doc_id", $"sh", $"n_sh")
       }.persist()
-    })
+    }
 
   /** Candidate pairs admitted by the prefix + size filters (ia < ib,
     * deduplicated). The join key is the prefix shingle — rarest-first,
@@ -1162,11 +1107,8 @@ object Dedup {
     * prunes far below that). Persisted memo: the pair set feeds both the
     * jaccard query's verifier and the meter's three counters.
     */
-  private val prefixCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def prefixCandidates(s: SparkSession, dir: String): DataFrame =
-    prefixCandCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.prefix_candidates") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "prefix_candidates", Seq("documents")) {
         val p = prefixIndex(s, dir)
@@ -1177,7 +1119,7 @@ object Dedup {
           .select($"ia", $"ib")
           .dropDuplicates("ia", "ib")
       }.persist()
-    })
+    }
 
   /** Exact shared-shingle counts restricted to the prefix-admitted
     * candidates — the verification join, the expensive half of the
@@ -1187,11 +1129,8 @@ object Dedup {
     * per consumer (exactly how interIndex is shared by the
     * jaccard/containment/clusters family).
     */
-  private val prefixInterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def prefixInter(s: SparkSession, dir: String): DataFrame =
-    prefixInterCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.prefix_inter") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "prefix_inter", Seq("documents")) {
         val (kept, _) = shingleIndex(s, dir)
@@ -1200,7 +1139,7 @@ object Dedup {
           .join(kept.toDF("ib", "sh"), Seq("ib", "sh"))
           .groupBy($"ia", $"ib").agg(count(lit(1)).as("inter"))
       }.persist()
-    })
+    }
 
   /** Floor of the SimHash band-bucket cap. The effective cap is
     * `greatest(MaxBucket, 4 × n_docs / 256)` — relative to the expected
@@ -1225,15 +1164,12 @@ object Dedup {
     * over every token), and a per-corpus stored artifact in production
     * exactly like the MinHash band index.
     */
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def simhashBands0(s: SparkSession, dir: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Dedup.simhash_bands") {
       Staging.readElseBuild(s, dir, "simhash_bands", Seq("documents")) {
         simhashBands0Uncached(s, dir)
       }.persist()
-    })
+    }
 
   private def simhashBands0Uncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

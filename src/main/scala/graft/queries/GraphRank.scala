@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.{Memo, Staging, Tables}
 
 /** Source-graph curation — link-analysis quality signals over the
   * corpus's SOURCE (domain) structure, the graph leg of the
@@ -93,36 +93,14 @@ object GraphRank {
     */
   private[queries] val MirrorOv = 0.1
 
-  /** Session memos: the staged edge list feeds three queries and is
+  /** Drop and release the family's session memos ([[Memo]]): the
+    * staged edge list feeds three queries and is
     * read 2·[[Iters]] times by the rank loop; ranks feed the gate and
     * the sampler; the mirror subgraph feeds components, triangles and
     * the keep decision; components are a converged multi-round loop
     * (localCheckpoint-backed, like [[Dedup]]'s cluster labels).
     */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val rankCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val mirrorCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val compCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearCaches(): Unit = {
-    edgeCache.values.foreach(_.unpersist())
-    rankCache.values.foreach(_.unpersist())
-    mirrorCache.values.foreach(_.unpersist())
-    compCache.values.foreach(org.apache.spark.sql.GraftBridge.freeLocalCheckpoint)
-    // the trajectory's persisted inputs (ed/outw/verts) are plan
-    // prefixes, not memoized frames themselves — unpersist explicitly
-    rankAuxCache.values.flatten.foreach(_.unpersist())
-    edgeCache.clear()
-    rankCache.clear()
-    mirrorCache.clear()
-    compCache.clear()
-    trajCache.clear()
-    rankAuxCache.clear()
-  }
+  def clearCaches(): Unit = Memo.clear("GraphRank")
 
   /** Distinct (sh, source) pairs from the df-filtered shingle index —
     * the source-level posting list. Distinct-per-source first, so a
@@ -142,7 +120,7 @@ object GraphRank {
     * self-join), one on the (sa, sb) pair.
     */
   private[graft] def sourceEdges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "GraphRank.source_graph") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "source_graph", Seq("documents")) {
         val ss = srcShingles(s, dir)
@@ -151,7 +129,7 @@ object GraphRank {
           .groupBy($"sa", $"sb")
           .agg(count(lit(1)).as("w"))
       }.persist()
-    })
+    }
 
   /** r0 … r[[Iters]]: the full exact-decimal PageRank trajectory over
     * the symmetrized edge list. Per directed edge (u, v):
@@ -163,13 +141,15 @@ object GraphRank {
     * The trajectory feeds [[sourceRanks]] (its last element) and the
     * gr_rank_delta convergence meter (adjacent differences).
     */
-  private val trajCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[DataFrame]]
-  private val rankAuxCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[DataFrame]]
-
   private def rankIterations(s: SparkSession, dir: String): Seq[DataFrame] =
-    trajCache.getOrElseUpdate((s, dir), {
+    rankTrajectory(s, dir)._1
+
+  /** The trajectory plus its persisted inputs (ed/outw/verts) — plan
+    * prefixes of every iteration rather than memoized frames of their
+    * own, held in the memo so releasing it frees them too. */
+  private def rankTrajectory(
+      s: SparkSession, dir: String): (Seq[DataFrame], Seq[DataFrame]) =
+    Memo(s, dir, "GraphRank.rank_trajectory") {
       import s.implicits._
       val e = sourceEdges(s, dir)
       val ed = e.select($"sa".as("u"), $"sb".as("v"), $"w")
@@ -178,7 +158,6 @@ object GraphRank {
       val outw = ed.groupBy($"u").agg(sum($"w").as("tw")).persist()
       val verts = Tables(s, dir).documents
         .select($"source".as("v")).distinct().persist()
-      rankAuxCache.put((s, dir), Seq(ed, outw, verts))
       val nn = verts.agg(count(lit(1)).as("n"))
       val r0 = verts.crossJoin(broadcast(nn))
         .select($"v", round(lit(1.0) / $"n", 6).as("r"))
@@ -198,7 +177,7 @@ object GraphRank {
       // recompute); the documented 100 TB posture instead writes each
       // iteration as a staged table (reliable storage) and restarts the
       // loop from the last committed iteration on failure.
-      (1 to Iters).scanLeft(r0) { (r, _) =>
+      val traj = (1 to Iters).scanLeft(r0) { (r, _) =>
         val m = ed.join(outw, "u")
           .join(r.toDF("u", "r"), "u")
           .select($"v",
@@ -210,10 +189,11 @@ object GraphRank {
             lit(Damping) * coalesce($"sm", lit(0.0)), 6).as("r"))
           .localCheckpoint()
       }
-    })
+      (traj, Seq(ed, outw, verts))
+    }
 
   private[graft] def sourceRanks(s: SparkSession, dir: String): DataFrame =
-    rankCache.getOrElseUpdate((s, dir), rankIterations(s, dir).last.persist())
+    Memo(s, dir, "GraphRank.source_ranks")(rankIterations(s, dir).last.persist())
 
   /** Per-source distinct df-filtered shingle counts — the denominators
     * of the overlap coefficient. Staged with the graph (a production
@@ -234,7 +214,7 @@ object GraphRank {
     * the raw ratio; the emitted `ov` is the family's 6-decimal round.
     */
   private[graft] def mirrorEdges(s: SparkSession, dir: String): DataFrame =
-    mirrorCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "GraphRank.mirror_edges") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "mirror_edges", Seq("documents")) {
         val nsh = srcSizes(s, dir)
@@ -245,7 +225,7 @@ object GraphRank {
           .select($"sa", $"sb", $"w",
             round($"w".cast("double") / least($"na", $"nb"), 6).as("ov"))
       }.persist()
-    })
+    }
 
   /** Connected components of the mirror subgraph — the mirror
     * CLUSTERS a curation run reviews (a set of sources that
@@ -264,7 +244,7 @@ object GraphRank {
     * input to the keep decision.
     */
   private[graft] def mirrorComponents(s: SparkSession, dir: String): DataFrame =
-    compCache.getOrElseUpdate((s, dir), Staging.readElseBuild(
+    Memo(s, dir, "GraphRank.mirror_components")(Staging.readElseBuild(
       s, dir, "mirror_components", Seq("documents")) {
       import s.implicits._
       val me = mirrorEdges(s, dir)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Memo
 import graft.kv.KvOps
 import graft.shard.Sharding
 
@@ -321,7 +322,7 @@ object KvQueries {
       // session-memoized (constant per corpus), so the gate costs one
       // metadata-sized job per session, nothing per execution.
       val vparts = math.min(Int.MaxValue.toLong,
-        feCountCache.getOrElseUpdate((s, dir), fe.count()) / 2000000L + 1).toInt
+        Memo(s, dir, "KvQueries.first_epoch_count")(fe.count()) / 2000000L + 1).toInt
       var view = fe.filter($"fe" <= 0)
         .join(broadcast(cfgs.filter($"epoch" === 0).select($"shard", $"gid")), "shard")
         .select($"key", $"shard", $"gid")
@@ -398,28 +399,8 @@ object KvQueries {
         (ascii(substring($"key", 1, 1)) % Sharding.NShards).cast("int"))
   }
 
-  /** Session memo of kv_gc's key table — (key, shard, fe): each live
-    * key with the epoch its first non-get op arrived. The kv_gc union
-    * references this frame ~10 times (4 epoch views, each feeding a
-    * snapshot and the next view); without the persist each reference
-    * re-runs the op-log dedup window, turning a 26-row metadata frame
-    * into the query's whole cost (measured 3.7 s → 0.4 s at sf0.01).
-    */
-  private val feCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val feCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  /** Drop and unpersist the memoized kv_gc key table (inputs rewritten)
-    * — same contract as Dedup/Similarity/TextAnalysis.clearCaches: a
-    * corpus regenerated at the same dir in-session must not read a
-    * stale persisted frame.
-    */
-  def clearCaches(): Unit = {
-    feCache.values.foreach(_.unpersist())
-    feCache.clear()
-    feCountCache.clear()
-  }
+  /** Drop and release this module's session memos ([[Memo]]). */
+  def clearCaches(): Unit = Memo.clear("KvQueries")
 
   /** Each transition's moved shards in arrival order — (epoch,
     * config_num, step, shard, from_gid, to_gid), step numbering within
@@ -439,13 +420,20 @@ object KvQueries {
     }.toDF("epoch", "config_num", "step", "shard", "from_gid", "to_gid")
   }
 
+  /** Session memo of kv_gc's key table — (key, shard, fe): each live
+    * key with the epoch its first non-get op arrived. The kv_gc union
+    * references this frame ~10 times (4 epoch views, each feeding a
+    * snapshot and the next view); without the persist each reference
+    * re-runs the op-log dedup window, turning a 26-row metadata frame
+    * into the query's whole cost (measured 3.7 s → 0.4 s at sf0.01).
+    */
   private[queries] def firstEpochs(s: SparkSession, dir: String): DataFrame =
-    feCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "KvQueries.first_epochs") {
       import s.implicits._
       routedOps(s, dir).filter($"op" =!= "get")
         .groupBy($"key", $"shard").agg(min($"epoch").as("fe"))
         .persist()
-    })
+    }
 
   /** The clerk's CACHED (one-epoch-stale) shard map per epoch: epoch e
     * carries the gids of the config active in epoch max(0, e−1) — the

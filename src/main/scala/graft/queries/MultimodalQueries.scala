@@ -162,11 +162,8 @@ object MultimodalQueries {
     * 100 TB this table is an index-build product exactly like
     * `token_counts`.
     */
-  private val mediaTokCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def mediaTokenCounts(s: SparkSession, dir: String): DataFrame =
-    mediaTokCache.getOrElseUpdate((s, dir), {
+    graft.core.Memo(s, dir, "MultimodalQueries.media_token_counts") {
       import s.implicits._
       graft.core.Staging.readElseBuild(s, dir, "media_token_counts",
         Seq("documents")) {
@@ -177,7 +174,7 @@ object MultimodalQueries {
                 "n_frames * (((width + 7) div 8) * ((height + 7) div 8))"))
               .cast("long").as("mm"))
       }.persist()
-    })
+    }
 
   /** Stage the media token-accounting artifact (StageIndexes hook). */
   def stageIndexes(s: SparkSession, dir: String): Unit = {
@@ -185,13 +182,8 @@ object MultimodalQueries {
     ()
   }
 
-  /** Drop the memoized media token table (corpus rewritten in-session —
-    * same contract as the other clearCaches sites).
-    */
-  def clearCaches(): Unit = {
-    mediaTokCache.values.foreach(_.unpersist())
-    mediaTokCache.clear()
-  }
+  /** Drop and release this module's session memos ([[graft.core.Memo]]). */
+  def clearCaches(): Unit = graft.core.Memo.clear("MultimodalQueries")
 
   /** Hamming radius of mm_audio_dedup; 2 bands make the band join exact
     * for this radius (pigeonhole). Interpolated into the oracle.

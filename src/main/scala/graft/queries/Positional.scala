@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.{Memo, Staging, Tables}
 import graft.queries.QueryFns.wsTokens
 
 /** Positional retrieval — exact phrase and proximity search, the two
@@ -64,28 +64,8 @@ object Positional {
     */
   private[queries] val PhraseCapP = 2000
 
-  private val posCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val capCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bgCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearCaches(): Unit = {
-    posCache.values.foreach(_.unpersist())
-    capCache.values.foreach(_.unpersist())
-    bgCache.values.foreach(_.unpersist())
-    gateToksCache.values.foreach(_.unpersist())
-    cfCache.values.foreach(_.unpersist())
-    bgCfCache.values.foreach(_.unpersist())
-    posCache.clear()
-    capCache.clear()
-    bgCache.clear()
-    gateToksCache.clear()
-    cfCache.clear()
-    bgCfCache.clear()
-    posNbCache.clear()
-  }
+  /** Drop and release this module's session memos ([[Memo]]). */
+  def clearCaches(): Unit = Memo.clear("Positional")
 
   /** Force-build the positional family's durable artifacts for `dir` —
     * the index-build half of the capped tier's production split. */
@@ -97,11 +77,6 @@ object Positional {
     bigramCf(s, dir)
     ()
   }
-
-  private val cfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bgCfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** The STAGED per-word posting-count table (word, df) of the
     * positional index — the per-list length metadata a production
@@ -116,21 +91,21 @@ object Positional {
     * the meters that EXPOSE adf — is bit-identical.
     */
   private[queries] def positionalCf(s: SparkSession, dir: String): DataFrame =
-    cfCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Positional.positional_cf") {
       Staging.readElseBuild(s, dir, "positional_cf", Seq("documents")) {
         positionalIndex(s, dir).groupBy(col("word"))
           .agg(count(lit(1)).as("df"))
       }.persist()
-    })
+    }
 
   /** The staged (bg, df) twin of [[positionalCf]] for the biword index. */
   private[queries] def bigramCf(s: SparkSession, dir: String): DataFrame =
-    bgCfCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Positional.bigram_cf") {
       Staging.readElseBuild(s, dir, "bigram_cf", Seq("documents")) {
         bigramIndex(s, dir).groupBy(col("bg"))
           .agg(count(lit(1)).as("df"))
       }.persist()
-    })
+    }
 
   /** The staged positional index: (word, doc_id, pos), lowercased
     * whitespace tokens (the lexical family's tokenizer). pos is
@@ -150,7 +125,7 @@ object Positional {
     * reaches an InMemoryRelation.
     */
   private[graft] def positionalIndex(s: SparkSession, dir: String): DataFrame =
-    posCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Positional.positional_index") {
       var built: DataFrame = null
       val scan = Staging.readElseBuild(s, dir, "positional_index_wb",
         Seq("documents"), partitionCols = Seq("wb")) {
@@ -169,16 +144,14 @@ object Positional {
       // count + bucketed write from tokenizing the corpus twice
       if (built != null) built.unpersist()
       out
-    })
+    }
 
   /** The committed bucket modulus of [[positionalIndex]]'s artifact —
     * recomputed as the writer computed it (size-derived, deterministic
     * for a given corpus) and session-memoized: one count job on the
     * persisted index per session. */
-  private val posNbCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private[queries] def positionalNb(s: SparkSession, dir: String): Int =
-    posNbCache.getOrElseUpdate((s, dir),
+    Memo(s, dir, "Positional.positional_nb")(
       graft.core.WbLayout.bucketsFor(positionalIndex(s, dir).count()))
 
   /** Bucket-count gate for the session-corpus pruned route: below this
@@ -247,11 +220,11 @@ object Positional {
     * re-derivation checks the artifact exactly.
     */
   private[graft] def cappedIndex(s: SparkSession, dir: String): DataFrame =
-    capCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Positional.positional_cap") {
       Staging.readElseBuild(s, dir, s"positional_cap_p$PhraseCapP", Seq("documents")) {
         cappedCut(positionalIndex(s, dir))
       }.persist()
-    })
+    }
 
   /** The capped-list BUILD: each word's first [[PhraseCapP]] postings
     * by (doc_id, pos), as a bounded-heap partial aggregate — exposed
@@ -282,12 +255,12 @@ object Positional {
     * the standard space-for-candidates trade the biword index makes.
     */
   private[graft] def bigramIndex(s: SparkSession, dir: String): DataFrame =
-    bgCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Positional.bigram_index") {
       Staging.readElseBuild(s, dir, "bigram_index", Seq("documents")) {
         bigramRowsOf(s, Tables(s, dir).documents
           .repartition(s.sparkContext.defaultParallelism))
       }.persist()
-    })
+    }
 
   /** `dir`'s staged positional index extended by a batch of (doc_id,
     * text) — pure union: positions are a per-doc derivation with no
@@ -354,11 +327,9 @@ object Positional {
     * tokenize — was re-planned by every phrase/proximity/snippet query
     * (≈10 consumers per bench run). The probe set is an INPUT, shared
     * the way a serving tier holds its query batch in memory. Restricted
-    * probes (the scale ladders' fixed batches) bypass the memo. */
-  private val gateToksCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Probe docs with their materialized token arrays. The gate query
+    * probes (the scale ladders' fixed batches) bypass the memo.
+    *
+    * Probe docs with their materialized token arrays. The gate query
     * set is the family's %QStep stride; the scale probe narrows it to
     * a fixed batch via `extra` (a serving deployment has a per-batch
     * query budget — ms/query must not conflate batch size with corpus
@@ -373,7 +344,7 @@ object Positional {
         .select($"doc_id".as("qid"), wsTokens(lower($"text")).as("toks"))
     }
     if (extra eq GateAll)
-      gateToksCache.getOrElseUpdate((s, dir), derive.persist())
+      Memo(s, dir, "Positional.gate_toks")(derive.persist())
     else derive
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.{Memo, Staging, Tables}
 
 /** Lexical retrieval and model-based filtering — the sparse complement
   * of the dense ANN ladder and the trained complement of the rule-based
@@ -77,17 +77,6 @@ object Retrieval {
     * per-query work at P regardless of document frequency. */
   private[queries] val BmImpactP = 1000
 
-  /** Session memos: per-(word, doc) contributions and the exact scored
-    * candidates (shared by tx_bm25_topk, ann_hybrid_rrf, and the recall
-    * meter), so the postings probe runs once per corpus generation.
-    */
-  private val contribCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bm25Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Query-by-example term probe over an arbitrary (doc_id, text)
     * frame: distinct (qid, word) over the first [[QLen]] lowercased
     * tokens. Queries × ≤QLen rows — broadcast-sized at any corpus
@@ -109,14 +98,11 @@ object Retrieval {
     * deployment holds its query batch in memory; re-parsing it per
     * consumer was pure plan overhead (~0.1–0.2 s per use at sf0.1).
     */
-  private val qtCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[queries] def queryTerms(s: SparkSession, dir: String): DataFrame =
-    qtCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.query_terms") {
       import s.implicits._
       termsOf(Tables(s, dir).documents.filter($"doc_id" % QStep === 0)).persist()
-    })
+    }
 
   /** One serving micro-batch: score an arbitrary (doc_id, text) query
     * frame against the STAGED impact index and emit the per-query
@@ -132,7 +118,11 @@ object Retrieval {
     topkBy(bm25Sum(termsOf(queryDocs), impactIndex(s, dir)), "bm25", k)
   }
 
-  /** Per-(word, doc) BM25 contribution `c` (6-decimal-rounded
+  /** Session memos: per-(word, doc) contributions and the exact scored
+    * candidates (shared by tx_bm25_topk, ann_hybrid_rrf, and the recall
+    * meter), so the postings probe runs once per corpus generation.
+    *
+    * Per-(word, doc) BM25 contribution `c` (6-decimal-rounded
     * IDF × saturated-TF) for every posting of a probed term — computed
     * ONCE, before any query expansion, because the contribution does
     * not depend on the query: the doc-length join, the df lookup and
@@ -146,7 +136,7 @@ object Retrieval {
     * as a broadcast 1-row aggregate.
     */
   private def bm25Contrib(s: SparkSession, dir: String): DataFrame =
-    contribCache.getOrElseUpdate((s, dir),
+    Memo(s, dir, "Retrieval.bm25_contrib")(
       contribFor(s, dir, queryTerms(s, dir)).persist())
 
   /** The contribution frame for an ARBITRARY probe's word set — the
@@ -192,10 +182,10 @@ object Retrieval {
     * probe makes proportional to the corpus for common terms. The
     * impact tier below is the scale path. */
   private[graft] def bm25Scored(s: SparkSession, dir: String): DataFrame =
-    bm25Cache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.bm25_scored") {
       implicit val sp: SparkSession = s
       bm25Sum(queryTerms(s, dir), bm25Contrib(s, dir)).persist()
-    })
+    }
 
   /** Impact-truncated candidates: each probed term's postings cut to
     * its top-[[BmImpactP]] by (contribution desc, doc_id) via the
@@ -219,7 +209,7 @@ object Retrieval {
     * re-derivation checks this index exactly.
     */
   private[queries] def impactIndex(s: SparkSession, dir: String): DataFrame =
-    indexCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.bm25_impact_index") {
       import s.implicits._
       // depth is part of the artifact identity: retuning BmImpactP
       // against an already-staged corpus must MISS and rebuild, never
@@ -231,7 +221,7 @@ object Retrieval {
           .select($"word", explode($"top").as("t"))
           .select($"word", $"t.id".as("doc_id"), $"t.ord".as("c"))
       }.persist()
-    })
+    }
 
   /** The FULL-vocabulary contribution frame the offline index jobs read
     * (per-word df over every term — deliberately NOT a broadcast join:
@@ -276,14 +266,11 @@ object Retrieval {
     * probed word the value equals the probed-frame derivation
     * (truncation is per-word independent). */
   private def stagedBounds(s: SparkSession, dir: String): DataFrame =
-    boundsCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.bm25_bounds") {
       Staging.readElseBuild(s, dir, s"bm25_bounds_p$BmImpactP", Seq("documents")) {
         boundsOf(allContrib(s, dir), BmImpactP)
       }.persist()
-    })
-
-  private val boundsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** The probed contributions truncated per word to depth `p` — the
     * parametric twin of [[impactIndex]] (identical rows for probed terms
@@ -347,17 +334,17 @@ object Retrieval {
   /** Memo for the gate-depth wand pair: tx_bm25_wand and
     * tx_bm25_wand_meter share one probe DAG, and the det/verdict frames
     * feed three consumers each — persisted once per (session, corpus). */
-  private val wandCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
-  private val wandPersisted =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
   private[graft] def wandParts(
-      s: SparkSession, dir: String, p: Int): (DataFrame, DataFrame) =
-    wandCache.getOrElseUpdate((s, dir, p), wandPartsUncached(s, dir, p))
-
-  private def wandPartsUncached(
       s: SparkSession, dir: String, p: Int): (DataFrame, DataFrame) = {
+    val (served, meter, _) =
+      Memo(s, dir, s"Retrieval.wand_p$p")(wandPartsUncached(s, dir, p))
+    (served, meter)
+  }
+
+  /** (served, meter, the persisted frames they share) — the third part
+    * is held only so releasing the memo frees it. */
+  private def wandPartsUncached(s: SparkSession, dir: String,
+      p: Int): (DataFrame, DataFrame, Seq[DataFrame]) = {
     implicit val sp: SparkSession = s
     import s.implicits._
     val k = BmK
@@ -382,7 +369,6 @@ object Retrieval {
       .agg(sum($"c".cast("decimal(18,6)")).cast("double").as("s_hat"),
         sum($"b".cast("decimal(18,6)")).cast("double").as("covered"))
       .persist() // feeds theta, the candidate filter, and the meter
-    wandPersisted.add(det)
     val theta = det.groupBy($"qid")
       .agg(graft.functions.GroupedTopK.groupedTopK($"s_hat", $"doc_id", k).as("top"),
         count(lit(1)).as("n_seen"))
@@ -395,7 +381,6 @@ object Retrieval {
           .otherwise(when(coalesce($"n_seen", lit(0L)) >= k && $"theta" > $"u", 1L)
             .otherwise(0L)).as("safe"))
       .persist() // read by cand, the fallback restriction, and the meter
-    wandPersisted.add(verd)
     // bound comparison in DECIMAL: s_hat/u/covered/theta are exact
     // 6-decimal quantities held as nearest doubles, and a double-typed
     // `s_hat + (u - covered) >= theta` can round an exact tie just below
@@ -421,7 +406,7 @@ object Retrieval {
     // re-expanding — value-identical either way, never an EXTRA
     // traversal.
     val unsafeQids = verd.filter($"safe" === 0).select($"qid")
-    val unsafeExact = bm25Cache.get((s, dir)) match {
+    val unsafeExact = Memo.peek[DataFrame](s, dir, "Retrieval.bm25_scored") match {
       case Some(exact) => exact.join(unsafeQids, Seq("qid"), "left_semi")
       case None =>
         bm25Sum(qt.join(unsafeQids, Seq("qid"), "left_semi"), bm25Contrib(s, dir))
@@ -437,7 +422,7 @@ object Retrieval {
         when($"safe" === 1, coalesce($"n_resc", lit(0L)))
           .otherwise(coalesce($"n_full", lit(0L))).as("n_rescore"))
       .orderBy($"qid")
-    (served, meter)
+    (served, meter, Seq(det, verd))
   }
 
   /** RM3 expansion width: terms appended to each query's probe. */
@@ -482,14 +467,11 @@ object Retrieval {
     * exclusion bounds (U == 0 — no probed list was cut — implies the
     * truncated candidate set, sums, and priors all equal the exact
     * tier's, so the served ranking IS the exact ranking).
-    */
-  private val qlCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Exact-tier QL candidates (qid, doc_id, ql) — shared by the top-k
+    *
+    * Exact-tier QL candidates (qid, doc_id, ql) — shared by the top-k
     * query and both meters, persisted once per (session, corpus). */
   private[graft] def qlScored(s: SparkSession, dir: String): DataFrame =
-    qlCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.ql_scored") {
       import s.implicits._
       val qt = queryTerms(s, dir)
       val tf = TextAnalysis.termFreqs(s, dir).select($"doc_id", $"word", $"n")
@@ -503,7 +485,7 @@ object Retrieval {
           round(log(lit(1.0) +
             $"n".cast("double") * $"tt" / (lit(QlMu) * $"cf")), 6).as("c"))
       qlSum(s, dir, qt, contrib).persist()
-    })
+    }
 
   /** Expand a QL contribution frame to (query, doc), sum the
     * DECIMAL-cast contributions, and add the per-doc Dirichlet length
@@ -542,11 +524,6 @@ object Retrieval {
         round(log(lit(1.0) +
           $"n".cast("double") * $"tt" / (lit(QlMu) * $"cf")), 6).as("c"))
   }
-
-  private val qlIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val qlBoundsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** Per-term truncation at depth `p` by the impact key
     * `c + w·ln(μ/(m+μ))` (w = [[QlPriorW]], measured to 0 — see there):
@@ -605,21 +582,21 @@ object Retrieval {
     * probed-words-only re-derivation checks the stored artifact
     * exactly. */
   private def qlImpactIndex(s: SparkSession, dir: String): DataFrame =
-    qlIndexCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.ql_impact_index") {
       Staging.readElseBuild(s, dir, s"ql_impact_index_p$BmImpactP", Seq("documents")) {
         qlTruncAt(s, dir, BmImpactP)
       }.persist()
-    })
+    }
 
   /** Per-list QL exclusion bounds at the gate depth — the max-score
     * metadata the offline build stages beside the index, consumed by
     * tx_ql_safe's per-query exactness certificate. */
   private def qlStagedBounds(s: SparkSession, dir: String): DataFrame =
-    qlBoundsCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.ql_bounds") {
       Staging.readElseBuild(s, dir, s"ql_bounds_p$BmImpactP", Seq("documents")) {
         qlBoundsAt(s, dir, BmImpactP)
       }.persist()
-    })
+    }
 
   /** Impact-tier QL candidates: the gate probes against the staged
     * truncated index — per-query work ≤ terms × P at ANY collection
@@ -730,12 +707,9 @@ object Retrieval {
     * flagged); now the merge reads a vocabulary-sized artifact plus a
     * 1-row scalar and pays O(batch) aggregation for the delta only.
     * Session-memoized like the other staged lexical artifacts. */
-  private val incBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   private[graft] def incBaseAggs(
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    incBaseCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Retrieval.inc_base_aggs") {
       import s.implicits._
       val df = Staging.readElseBuild(s, dir, s"bm25_base_df_inc$IncStep",
         Seq("documents")) {
@@ -749,7 +723,7 @@ object Retrieval {
           .agg(count(lit(1)).as("nd"), coalesce(sum($"m"), lit(0L)).as("len"))
       }.persist()
       (df, st)
-    })
+    }
 
   /** INCREMENTAL lexical-index maintenance: serve the gate queries from
     * the stored base index MERGED with the arriving batch — postings by
@@ -1129,17 +1103,16 @@ object Retrieval {
     *    (tx_ql_topk's SQL verbatim), so the hash gate PROVES
     *    rank-safety.
     */
-  private val qlWandCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
-  private val qlWandPersisted =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
   private[graft] def qlWandParts(
-      s: SparkSession, dir: String, p: Int = BmImpactP): (DataFrame, DataFrame) =
-    qlWandCache.getOrElseUpdate((s, dir, p), qlWandPartsUncached(s, dir, p))
+      s: SparkSession, dir: String, p: Int = BmImpactP): (DataFrame, DataFrame) = {
+    val (served, meter, _) =
+      Memo(s, dir, s"Retrieval.ql_wand_p$p")(qlWandPartsUncached(s, dir, p))
+    (served, meter)
+  }
 
-  private def qlWandPartsUncached(
-      s: SparkSession, dir: String, p: Int): (DataFrame, DataFrame) = {
+  /** (served, meter, the persisted frames they share) — see [[wandPartsUncached]]. */
+  private def qlWandPartsUncached(s: SparkSession, dir: String,
+      p: Int): (DataFrame, DataFrame, Seq[DataFrame]) = {
     implicit val sp: SparkSession = s
     import s.implicits._
     val k = BmK
@@ -1168,7 +1141,6 @@ object Retrieval {
         ($"sm_hat" + round($"qlen".cast("double")
           * log(lit(QlMu) / ($"m" + lit(QlMu))), 6)).as("s_hat"))
       .persist()
-    qlWandPersisted.add(det)
     val theta = det.groupBy($"qid")
       .agg(graft.functions.GroupedTopK.groupedTopK($"s_hat", $"doc_id", k).as("top"),
         count(lit(1)).as("n_seen"))
@@ -1190,7 +1162,6 @@ object Retrieval {
               && dec6($"theta") > dec6($"u") + dec6($"mp"), 1L)
             .otherwise(0L)).as("safe"))
       .persist()
-    qlWandPersisted.add(verd)
     val cand = det.join(verd.filter($"safe" === 1)
         .select($"qid", $"u", $"theta"), "qid")
       .filter($"theta".isNull ||
@@ -1221,7 +1192,7 @@ object Retrieval {
     // unsafe fallback: the exact tier restricted to unsafe probes BEFORE
     // expansion; reuse the session-memoized exact frame when it exists
     val unsafeQids = verd.filter($"safe" === 0).select($"qid")
-    val unsafeExact = qlCache.get((s, dir)) match {
+    val unsafeExact = Memo.peek[DataFrame](s, dir, "Retrieval.ql_scored") match {
       case Some(exact) => exact.join(unsafeQids, Seq("qid"), "left_semi")
       case None =>
         qlSum(s, dir, qt.join(unsafeQids, Seq("qid"), "left_semi"), contrib)
@@ -1237,7 +1208,7 @@ object Retrieval {
         when($"safe" === 1, coalesce($"n_resc", lit(0L)))
           .otherwise(coalesce($"n_full", lit(0L))).as("n_rescore"))
       .orderBy($"qid")
-    (served, meter)
+    (served, meter, Seq(det, verd))
   }
 
   /** OPT-IN EXACT-RESCORE serving: serve a query micro-batch from a
@@ -1607,19 +1578,19 @@ object Retrieval {
   /** Three-arm ground truth: BM25 impact × exact dense × exact QL —
     * shared by ann_hybrid_ql_rrf and the recall meter. */
   private def hybridQlExactFused(s: SparkSession, dir: String): DataFrame =
-    hybridCache.getOrElseUpdate((s, dir, "ql_exact3"), {
+    Memo(s, dir, "Retrieval.hybrid_ql_exact3") {
       import s.implicits._
       rrfFused3(s,
         hybridSparseRank(s, dir, $"vec_id" % QStep === 0),
         denseExactRank(s, dir),
         qlArmRank(s, dir, $"vec_id" % QStep === 0, impact = false))
         .persist()
-    })
+    }
 
   /** Three-arm all-staged serving fusion: BM25 impact × IVF-PQ dense ×
     * QL impact — shared by ann_hybrid_ql_serving and the recall meter. */
   private def hybridQlServingFused(s: SparkSession, dir: String): DataFrame =
-    hybridCache.getOrElseUpdate((s, dir, "ql_serving3"), {
+    Memo(s, dir, "Retrieval.hybrid_ql_serving3") {
       import s.implicits._
       val (nprobe, shortlist) = Similarity.pqServingDefaults
       val drank = Similarity.pqTopkFor(s, dir,
@@ -1630,29 +1601,26 @@ object Retrieval {
         drank,
         qlArmRank(s, dir, $"vec_id" % QStep === 0, impact = true))
         .persist()
-    })
-
-  private val hybridCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    }
 
   /** Ground-truth fusion: sparse impact arm × EXACT dense cosine —
     * shared by ann_hybrid_rrf and the recall meter. */
   private def hybridExactFused(s: SparkSession, dir: String): DataFrame =
-    hybridCache.getOrElseUpdate((s, dir, "exact"), {
+    Memo(s, dir, "Retrieval.hybrid_exact") {
       import s.implicits._
       rrfFused(s, hybridSparseRank(s, dir, $"vec_id" % QStep === 0),
         denseExactRank(s, dir))
         .persist()
-    })
+    }
 
   /** All-staged serving fusion: sparse impact arm × IVF-PQ dense arm at
     * the batch serving knobs — shared by ann_hybrid_serving and the
     * recall meter. */
   private def hybridServingFused(s: SparkSession, dir: String): DataFrame =
-    hybridCache.getOrElseUpdate((s, dir, "serving"), {
+    Memo(s, dir, "Retrieval.hybrid_serving") {
       import s.implicits._
       hybridServingFusedFor(s, dir, $"vec_id" % QStep === 0).persist()
-    })
+    }
 
   /** Probe-set-parameterized serving fusion — the ladder serves a FIXED
     * 400-query batch at every corpus multiple through this (a serving
@@ -2920,33 +2888,6 @@ object Retrieval {
     (loMap, loU, prior)
   }
 
-  /** Drop the memoized BM25 candidates (inputs rewritten in-session). */
-  def clearCaches(): Unit = {
-    qtCache.values.foreach(_.unpersist())
-    qtCache.clear()
-    bm25Cache.values.foreach(_.unpersist())
-    bm25Cache.clear()
-    contribCache.values.foreach(_.unpersist())
-    contribCache.clear()
-    indexCache.values.foreach(_.unpersist())
-    indexCache.clear()
-    boundsCache.values.foreach(_.unpersist())
-    boundsCache.clear()
-    qlCache.values.foreach(_.unpersist())
-    qlCache.clear()
-    qlIndexCache.values.foreach(_.unpersist())
-    qlIndexCache.clear()
-    qlBoundsCache.values.foreach(_.unpersist())
-    qlBoundsCache.clear()
-    qlWandCache.clear()
-    qlWandPersisted.forEach(_.unpersist())
-    qlWandPersisted.clear()
-    incBaseCache.values.foreach { case (a, b) => a.unpersist(); b.unpersist() }
-    incBaseCache.clear()
-    hybridCache.values.foreach(_.unpersist())
-    hybridCache.clear()
-    wandCache.clear()
-    wandPersisted.forEach(_.unpersist())
-    wandPersisted.clear()
-  }
+  /** Drop and release this module's session memos ([[Memo]]). */
+  def clearCaches(): Unit = Memo.clear("Retrieval")
 }

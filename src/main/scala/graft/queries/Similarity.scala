@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.{Memo, Staging, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`Array[Float]` column, TESTDATA.md).
@@ -134,9 +134,6 @@ object Similarity {
       .orderBy($"probe", $"rank")
   }
 
-  private val exactTopCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Session memo of the EXACT brute-force reference ranking — the
     * 25-probe top-10 (probe, rank, neighbor, cos), persisted once per
     * (session, corpus). This one frame was derived independently by
@@ -150,7 +147,7 @@ object Similarity {
     * (pca's arm projected the same rows through pcaCells — same
     * (probe, neighbor, cos) multiset, same fold). */
   private[queries] def exactTop10(s: SparkSession, dir: String): DataFrame =
-    exactTopCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "Similarity.exact_top10") {
       implicit val sp: SparkSession = s
       import s.implicits._
       val v = vecs(s, dir)
@@ -160,7 +157,7 @@ object Similarity {
         .withColumn("cos", dot($"pe", $"embedding") / sqrt($"pn" * $"norm2"))
         .select($"probe", $"vec_id".as("neighbor"), $"cos")
       topk(pairs, 10).persist()
-    })
+    }
 
   /** The recall meters' exact reference set: the memoized ranking's
     * top-5 (probe, neighbor) prefix. */
@@ -1015,10 +1012,8 @@ object Similarity {
     * built). One count per (session, corpus), memoized; at production
     * scale this is a table-statistics lookup, not a job.
     */
-  private val sizeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def corpusSize(s: SparkSession, dir: String): Long =
-    sizeCache.getOrElseUpdate((s, dir), Tables(s, dir).embeddings.count())
+    Memo(s, dir, "Similarity.corpus_size")(Tables(s, dir).embeddings.count())
 
   /** Seed-cell id per vector for quantizer TRAINING. b = 0: the stored
     * label (today's gate behavior, exactly). b > 0: each label cell is
@@ -1042,13 +1037,10 @@ object Similarity {
   /** Session memo for [[seedCells]]: dedup_emb_cos references it on BOTH
     * sides of its self-join (plus the seed_cells meter), and at b > 0
     * each evaluation would re-run the full-corpus centroid aggregation —
-    * the same staged-index discipline as [[distCache]]/[[pqCache]].
+    * the same staged-index discipline as [[distsAgainst]]/[[pqCodebook]].
     */
-  private val seedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def seedCells(s: SparkSession, dir: String): DataFrame =
-    seedCache.getOrElseUpdate((s, dir), seedCellsUncached(s, dir).persist())
+    Memo(s, dir, "Similarity.seed_cells")(seedCellsUncached(s, dir).persist())
 
   private def seedCellsUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1169,11 +1161,8 @@ object Similarity {
     * beyond that, train on a sample and prune the centroid search with a
     * coarse pre-quantizer — the dataflow here is unchanged).
     */
-  private val centCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def trainedCentroids(s: SparkSession, dir: String): DataFrame =
-    centCache.getOrElseUpdate((s, dir), Staging.readElseBuild(
+    Memo(s, dir, "Similarity.ivf_centroids")(Staging.readElseBuild(
       s, dir, "ivf_centroids", Seq("embeddings")) {
       import s.implicits._
       if (splitBitsFor(corpusSize(s, dir)) == 0) centroidVectors(s, dir)
@@ -1249,17 +1238,6 @@ object Similarity {
       .select($"label".as("clabel"), $"cv")
   }
 
-  /** Session-scoped memo of the persisted (vector × centroid) distance
-    * table: ann_ivf2_topk consumes it on both join sides (assignments +
-    * probe cells) and dedup_emb_cos_ivf self-joins its derivation —
-    * without the memo, centroid TRAINING and the O(vectors × centroids
-    * × dims) distance fold re-run per consumer. Same staged-index
-    * pattern as [[Dedup.indexCache]]; the trained IVF index is exactly
-    * the artifact a production pipeline writes once per corpus.
-    */
-  private val distCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Power-iteration rounds for the PCA axis ([[pcaAxis]]). CTE-for-CTE
     * the oracle replays the SAME count ([[PcaCte]] is generated from
     * this constant) — tune the constant, never the SQL.
@@ -1284,7 +1262,7 @@ object Similarity {
     * 100 TB each round stays one O(n·d) pass with a d-row shuffle.
     */
   private def pcaAxis(s: SparkSession, dir: String): DataFrame =
-    pcaCache.getOrElseUpdate((s, dir), Staging.readElseBuild(
+    Memo(s, dir, "Similarity.pca_axes")(Staging.readElseBuild(
       s, dir, "pca_axes", Seq("embeddings")) {
       import s.implicits._
       val de = Tables(s, dir).embeddings
@@ -1333,9 +1311,6 @@ object Similarity {
     }
     v
   }
-
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** Cells per side of the PCA-grid index (ann_pca_topk): the 2-D
     * projection sketch bucketed into a PcaGrid × PcaGrid lattice over
@@ -1399,23 +1374,18 @@ object Similarity {
     pcaAxis(s, dir)
   }
 
-  /** Drop and unpersist memoized distance tables (inputs rewritten). */
-  def clearCaches(): Unit = {
-    distCache.values.foreach(_.unpersist())
-    distCache.clear()
-    pqCache.values.foreach(_.unpersist())
-    pqCache.clear()
-    seedCache.values.foreach(_.unpersist())
-    seedCache.clear()
-    centCache.clear()
-    sizeCache.clear()
-    pcaCache.values.foreach(_.unpersist())
-    pcaCache.clear()
-    exactTopCache.values.foreach(_.unpersist())
-    exactTopCache.clear()
-  }
+  /** Drop and release this module's session memos ([[Memo]]). */
+  def clearCaches(): Unit = Memo.clear("Similarity")
 
-  /** Squared L2 distance of every vector to every centroid of the given
+  /** Session-scoped memo of the persisted (vector × centroid) distance
+    * table: ann_ivf2_topk consumes it on both join sides (assignments +
+    * probe cells) and dedup_emb_cos_ivf self-joins its derivation —
+    * without the memo, centroid TRAINING and the O(vectors × centroids
+    * × dims) distance fold re-run per consumer. Same staged-index
+    * pattern as [[Dedup.shingleIndex]]; the trained IVF index is exactly
+    * the artifact a production pipeline writes once per corpus.
+    *
+    * Squared L2 distance of every vector to every centroid of the given
     * quantizer: one sequential zip_with fold in DOUBLE per pair (same
     * order as the oracle's list_reduce), against the broadcast centroid
     * table. Memoized + persisted per (session, corpus, quantizer). Cost
@@ -1430,7 +1400,7 @@ object Similarity {
   private def distsAgainst(
       s: SparkSession, dir: String, key: String,
       cents: => DataFrame): DataFrame =
-    distCache.getOrElseUpdate((s, dir + key), {
+    Memo(s, dir, s"Similarity.dists$key") {
       import s.implicits._
       Tables(s, dir).embeddings
         .select($"vec_id", $"embedding")
@@ -1441,7 +1411,7 @@ object Similarity {
           lit(0.0), (acc, x) => acc + x))
         .select($"vec_id", $"clabel", $"d")
         .persist()
-    })
+    }
 
   private def centroidDists(s: SparkSession, dir: String): DataFrame =
     distsAgainst(s, dir, "", trainedCentroids(s, dir))
@@ -1551,7 +1521,7 @@ object Similarity {
     * every staged index here.
     */
   private def imiDists(s: SparkSession, dir: String): DataFrame =
-    distCache.getOrElseUpdate((s, dir + "#imi"), {
+    Memo(s, dir, "Similarity.dists#imi") {
       import s.implicits._
       def fold(lo: Column, hi: Column) = aggregate(
         transform(sequence(lo, hi),
@@ -1566,7 +1536,7 @@ object Similarity {
           fold(lit(1), $"h").as("d1"),
           fold($"h" + 1, size($"embedding")).as("d2"))
         .persist()
-    })
+    }
 
   /** IMI product-cell assignment: independent argmin per half (ties →
     * smaller label, the [[assignmentsFrom]] contract), cell id =
@@ -1781,7 +1751,7 @@ object Similarity {
     * coarse quantizer's cell splitting uses.
     */
   private def pqSubvectors(s: SparkSession, dir: String): DataFrame =
-    pqCache.getOrElseUpdate((s, dir, "sub"), {
+    Memo(s, dir, "Similarity.pq_sub") {
       // staged like the codebook/codes below: codebook training, code
       // assignment, AND the error meter all fold over these rows — the
       // residual join + slicing would otherwise run three times cold
@@ -1811,15 +1781,7 @@ object Similarity {
               lit(1 << (PqBits + j - 1))).otherwise(lit(0)))
           .drop("thr")
       }.select($"vec_id", $"m", $"seed", $"sub").persist()
-    })
-
-  /** Session memo for the PQ index (codebook + codes) — consumed by the
-    * serving query, the recall meter, and the codes meter; the PQ index
-    * is exactly the artifact a production pipeline writes once per
-    * corpus (same staged-index pattern as [[distCache]]).
-    */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    }
 
   /** Shared PQ codebook: per (subspace, sign-seed group) the
     * exact-DECIMAL mean residual subvector — PqM·2^PqBits rows, trained
@@ -1858,8 +1820,13 @@ object Similarity {
       .select($"m", $"code", $"cvq")
   }
 
+  /** Session memo for the PQ index (codebook + codes) — consumed by the
+    * serving query, the recall meter, and the codes meter; the PQ index
+    * is exactly the artifact a production pipeline writes once per
+    * corpus (same staged-index pattern as [[distsAgainst]]).
+    */
   private def pqCodebook(s: SparkSession, dir: String): DataFrame =
-    pqCache.getOrElseUpdate((s, dir, "book"), {
+    Memo(s, dir, "Similarity.pq_book") {
       import s.implicits._
       Staging.readElseBuild(s, dir, s"pq_codebook_$PqParams", Seq("embeddings")) {
         val sub = pqSubvectors(s, dir)
@@ -1871,18 +1838,18 @@ object Similarity {
           pqTrain(sub, pqAssign(sub, book))
         }
       }.persist()
-    })
+    }
 
   /** Per-(vector, subspace) PQ code: argmin over the subspace's codebook
     * (one Lloyd step past the sign seeding; ties → smaller code, the
     * [[assignmentsFrom]] contract). Persisted per session.
     */
   private def pqCodes(s: SparkSession, dir: String): DataFrame =
-    pqCache.getOrElseUpdate((s, dir, "codes"), {
+    Memo(s, dir, "Similarity.pq_codes") {
       Staging.readElseBuild(s, dir, s"pq_codes_$PqParams", Seq("embeddings")) {
         pqAssign(pqSubvectors(s, dir), pqCodebook(s, dir))
       }.persist()
-    })
+    }
 
   /** IVF-PQ serving pass shared by ann_pq_topk (probes < 50) and the
     * recall meter (probes < 25): nprobe=2 trained cells; approximate
@@ -2072,7 +2039,7 @@ object Similarity {
     * the probed cells.
     */
   def pqServingIndex(s: SparkSession, dir: String): DataFrame =
-    pqCache.getOrElseUpdate((s, dir, "srv"), {
+    Memo(s, dir, "Similarity.pq_srv") {
       import s.implicits._
       // staged (r17 optimization): the serving pass consumed its three
       // pieces (vectors+norms, cell assignments, per-vector codes) as
@@ -2099,7 +2066,7 @@ object Similarity {
       }.select($"vec_id", $"cell".cast("long").as("cell"), $"norm2",
           $"codes", $"embedding")
         .persist()
-    })
+    }
 
   /** The serving index restricted to `cells`, as a FRESH scan of the
     * staged cell-partitioned artifact (r18): the literal In over the

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.{Memo, Staging, Tables}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` table (TESTDATA.md). The reference's data plane is
@@ -28,7 +28,7 @@ object TextAnalysis {
   import QueryFns.{wsTokens, tokHash, hash48}
 
   /** Session-scoped memo of the persisted per-doc token-count table
-    * (doc_id, lang, m) — the [[Dedup.indexCache]] staging pattern.
+    * (doc_id, lang, m) — the [[Dedup.shingleIndex]] staging pattern.
     * tx_pack reads it on BOTH sides of its prefix sum (block totals +
     * the join back) and tx_mix on both sides of its rate computation;
     * without the memo each consumer re-runs the tokenize over the full
@@ -36,29 +36,23 @@ object TextAnalysis {
     * tokenize. 16 bytes a doc — a production pipeline materializes this
     * as its token-accounting table.
     */
-  private val tokCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[queries] def tokenCounts(s: SparkSession, dir: String): DataFrame =
-    tokCountCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.token_counts") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "token_counts", Seq("documents")) {
         Tables(s, dir).documents
           .select($"doc_id", $"lang",
             size(wsTokens($"text")).cast("long").as("m"))
       }.persist()
-    })
+    }
 
   /** Session-scoped memo of the CURATED survivor token counts
     * (doc_id, m): docs that win their exact-dedup content-hash group
     * and pass the quality gate — the input both prefix-sum phases of
     * tx_curation_packed read. Tokenize + quality run once per corpus.
     */
-  private val survivorCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def curationSurvivors(s: SparkSession, dir: String): DataFrame =
-    survivorCache.getOrElseUpdate((s, dir), Staging.readElseBuild(
+    Memo(s, dir, "TextAnalysis.curation_survivors")(Staging.readElseBuild(
       s, dir, "curation_survivors", Seq("documents")) {
       import s.implicits._
       val toks = $"toks"
@@ -143,11 +137,8 @@ object TextAnalysis {
     * tx_ccnet_buckets, tx_entropy) reads this artifact. Size is
     * Σ per-doc distinct words — strictly smaller than the token stream.
     */
-  private val tfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[queries] def termFreqs(s: SparkSession, dir: String): DataFrame =
-    tfCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.term_freqs") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "term_freqs", Seq("documents")) {
         Tables(s, dir).documents
@@ -156,7 +147,7 @@ object TextAnalysis {
           .groupBy($"doc_id", $"lang", $"word")
           .agg(count(lit(1)).as("n"))
       }.persist()
-    })
+    }
 
   /** Session memo of the corpus UNIGRAM LANGUAGE MODEL — staged as
     * `unigram_lm` (word, cnt): global word counts, the model the
@@ -165,16 +156,13 @@ object TextAnalysis {
     * the score join degrades gracefully from broadcast to a shuffle
     * equi-join on `word` — never anything pairwise.
     */
-  private val vocabCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def unigramLm(s: SparkSession, dir: String): DataFrame =
-    vocabCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.unigram_lm") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "unigram_lm", Seq("documents")) {
         termFreqs(s, dir).groupBy($"word").agg(sum($"n").as("cnt"))
       }.persist()
-    })
+    }
 
   /** Per-document average unigram log-probability (doc_id, lang, n_tok,
     * avg_logprob) — the CCNet-style perplexity proxy (Wenzek et al.
@@ -188,11 +176,8 @@ object TextAnalysis {
     * of doubles, so the IEEE addition order is identical in the oracle
     * (`list_reduce` over `list(... ORDER BY word)`).
     */
-  private val lpCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def docLogprob(s: SparkSession, dir: String): DataFrame =
-    lpCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.doc_logprob") {
       import s.implicits._
       val tot = unigramLm(s, dir).agg(sum($"cnt").as("n_total"))
       termFreqs(s, dir)
@@ -208,7 +193,7 @@ object TextAnalysis {
         .select($"doc_id", $"lang", $"m".cast("long").as("n_tok"),
           round($"lp" / $"m", 4).as("avg_logprob"))
         .persist()
-    })
+    }
 
   /** Target domain for DSIR importance weighting (tx_dsir_weights /
     * tx_dsir_select): English documents stand in for the
@@ -270,11 +255,8 @@ object TextAnalysis {
     * corpus generation (the same durable-artifact posture as the
     * unigram LM it extends).
     */
-  private val dsirRatioCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def dsirRatio(s: SparkSession, dir: String): DataFrame =
-    dsirRatioCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.dsir_ratio") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "dsir_ratio", Seq("documents")) {
         val tvocab = termFreqs(s, dir).filter($"lang" === DsirTargetLang)
@@ -282,7 +264,7 @@ object TextAnalysis {
         unigramLm(s, dir).join(tvocab, Seq("word"), "left")
           .select($"word", $"cnt", coalesce($"tcnt", lit(0L)).as("tcnt"))
       }.persist()
-    })
+    }
 
   private def dsirWeightsRaw(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -321,11 +303,8 @@ object TextAnalysis {
     * At 100 TB the artifact stores 64-bit gram hashes; here the strings
     * keep the oracle byte-comparable.
     */
-  private val gram4Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def gram4Index(s: SparkSession, dir: String): DataFrame =
-    gram4Cache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.gram4_index") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "gram4_index", Seq("documents")) {
         Tables(s, dir).documents
@@ -334,13 +313,10 @@ object TextAnalysis {
           .select($"doc_id",
             explode(array_distinct(wordGrams($"toks", 4))).as("g"))
       }.persist()
-    })
-
-  private val hashedBigramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   private def hashedBigramCounts(s: SparkSession, dir: String): DataFrame =
-    hashedBigramCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.hashed_bigram_counts") {
       import s.implicits._
       // staged (r17 optimization): the hashed feature table is the DSIR
       // model's input — an index-build product exactly like dsir_ratio
@@ -363,7 +339,7 @@ object TextAnalysis {
           .groupBy($"doc_id", $"lang", $"bucket")
           .agg(count(lit(1)).as("n"))
       }.persist()
-    })
+    }
 
   /** [[dsirWeightsRaw]] over the hashed-bigram feature space: identical
     * smoothed log-ratio estimator and fold discipline, with the fixed
@@ -458,17 +434,14 @@ object TextAnalysis {
     * an equi-join on (w1, w2), so at 100 TB it degrades from broadcast
     * to shuffle exactly like the unigram join, never anything pairwise.
     */
-  private val bigramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def bigramLm(s: SparkSession, dir: String): DataFrame =
-    bigramCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.bigram_lm") {
       import s.implicits._
       Staging.readElseBuild(s, dir, "bigram_lm", Seq("documents")) {
         bigramPairs(s, dir).groupBy($"w1", $"w2")
           .agg(count(lit(1)).as("cnt"))
       }.persist()
-    })
+    }
 
   /** Per-document mean interpolated bigram log-probability (doc_id,
     * lang, n_big, avg_logprob): for each adjacent pair, ln of
@@ -480,11 +453,8 @@ object TextAnalysis {
     * over the (w1, w2)-SORTED pair list (sequential left-fold double —
     * the [[docLogprob]] discipline).
     */
-  private val blpCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def docBigramLogprob(s: SparkSession, dir: String): DataFrame =
-    blpCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.doc_bigram_logprob") {
       import s.implicits._
       val uni = unigramLm(s, dir)
       val geo = uni.agg(sum($"cnt").as("n_total"), count(lit(1)).as("v_size"))
@@ -509,7 +479,7 @@ object TextAnalysis {
         .select($"doc_id", $"lang", $"m".cast("long").as("n_big"),
           round($"lp" / $"m", 4).as("avg_logprob"))
         .persist()
-    })
+    }
 
   /** Incremental LM maintenance (the [[Dedup.mergedBandIndex]]
     * counterpart for the scoring family): `dir`'s staged unigram model
@@ -544,11 +514,8 @@ object TextAnalysis {
     * else passes through at 1. Shared by tx_bpe_token_count and
     * tx_bpe_pack.
     */
-  private val bpeDocCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def bpeDocCounts(s: SparkSession, dir: String): DataFrame =
-    bpeDocCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.bpe_doc_counts") {
       import s.implicits._
       // staged (r17 optimization): the pack machinery references its
       // input ~4× (block-width scalar, block totals, the packing join),
@@ -566,7 +533,7 @@ object TextAnalysis {
           .agg(count(lit(1)).as("n_ws"),
             sum(coalesce($"n_sym", lit(1L))).as("n_bpe"))
       }.persist()
-    })
+    }
 
   /** Driver-side copy of the trained BPE segmentation vocabulary
     * (word → symbol count) — the task-shipped artifact
@@ -644,18 +611,15 @@ object TextAnalysis {
     * Artifacts stage as `bpe_merges` (the learned table — rank, sym1,
     * sym2, cnt) and `bpe_symbols` (per-word segmentation).
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   private def bpeArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeCache.getOrElseUpdate((s, dir), {
+    Memo(s, dir, "TextAnalysis.bpe_artifacts") {
       lazy val built = trainBpe(s, dir) // at most one loop even on double miss
       val m = Staging.readElseBuild(s, dir, s"bpe_merges_$BpeParams",
         Seq("documents"))(built._1)
       val y = Staging.readElseBuild(s, dir, s"bpe_symbols_$BpeParams",
         Seq("documents"))(built._2)
       (m.persist(), y.persist())
-    })
+    }
 
   private def trainBpe(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
@@ -726,33 +690,8 @@ object TextAnalysis {
     gram4Index(s, dir)
   }
 
-  /** Drop and unpersist the memoized token counts (inputs rewritten). */
-  def clearCaches(): Unit = {
-    tokCountCache.values.foreach(_.unpersist())
-    tokCountCache.clear()
-    survivorCache.values.foreach(_.unpersist())
-    survivorCache.clear()
-    tfCache.values.foreach(_.unpersist())
-    tfCache.clear()
-    vocabCache.values.foreach(_.unpersist())
-    vocabCache.clear()
-    lpCache.values.foreach(_.unpersist())
-    lpCache.clear()
-    dsirRatioCache.values.foreach(_.unpersist())
-    dsirRatioCache.clear()
-    bigramCache.values.foreach(_.unpersist())
-    bigramCache.clear()
-    blpCache.values.foreach(_.unpersist())
-    blpCache.clear()
-    bpeCache.values.foreach { case (m, y) => m.unpersist(); y.unpersist() }
-    bpeCache.clear()
-    bpeDocCache.values.foreach(_.unpersist())
-    bpeDocCache.clear()
-    hashedBigramCache.values.foreach(_.unpersist())
-    hashedBigramCache.clear()
-    gram4Cache.values.foreach(_.unpersist())
-    gram4Cache.clear()
-  }
+  /** Drop and release this module's session memos ([[Memo]]). */
+  def clearCaches(): Unit = Memo.clear("TextAnalysis")
 
   /** Tiny per-language stopword lists for the n-gram/stopword-voting
     * language-ID heuristic. Deterministic, shared with the oracle SQL.

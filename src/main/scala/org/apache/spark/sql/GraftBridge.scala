@@ -49,12 +49,4 @@ object GraftBridge {
       registry: org.apache.spark.sql.catalyst.analysis.FunctionRegistry)
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     ext.registerFunctions(registry)
-
-  /** Materialize an extensions object's injected optimizer rules for a
-    * session (what session build does internally; used by tests).
-    */
-  def buildOptimizerRules(ext: SparkSessionExtensions, session: SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(session)
 }

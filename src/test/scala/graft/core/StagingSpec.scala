@@ -125,21 +125,12 @@ class StagingSpec extends SparkSpec {
       "tx_curation_packed", "tx_pack", "tx_unigram_logprob",
       "tx_dsir_weights", "tx_bigram_logprob", "tx_bpe_segment",
       "mm_features", "ann_pq_codes", "ann_pca_project")
-    def clearAll(): Unit = {
-      graft.queries.Dedup.clearCaches()
-      graft.queries.Similarity.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
-      graft.multimodal.Multimodal.clearCaches()
-      graft.queries.KvQueries.clearCaches()
-      graft.queries.MultimodalQueries.clearCaches()
-      graft.queries.Retrieval.clearCaches()
-    }
     try {
-      clearAll()
+      graft.core.Memo.clear()
       val cold = families.map(q =>
         q -> graft.SparkEntry.queries(q)(spark, dir)
           .collect().map(_.toString).sorted.toSeq).toMap
-      clearAll() // drop session memos, keep disk
+      graft.core.Memo.clear() // drop session memos, keep disk
       families.foreach { q =>
         val warm = graft.SparkEntry.queries(q)(spark, dir)
           .collect().map(_.toString).sorted.toSeq
@@ -147,7 +138,7 @@ class StagingSpec extends SparkSpec {
         assert(warm.nonEmpty || cold(q).isEmpty)
       }
     } finally {
-      clearAll()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

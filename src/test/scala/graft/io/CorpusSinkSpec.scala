@@ -49,7 +49,7 @@ class CorpusSinkSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
       assert(m == q, s"manifest $m != oracle query $q")
     } finally {
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
@@ -67,14 +67,13 @@ class CorpusSinkSpec extends SparkSpec {
       // between the data rewrite and the new manifest must leave the
       // snapshot unpublished, not published-with-stale-manifest — the
       // committed publish() deletes _manifest before touching data.
-      graft.queries.TextAnalysis.clearCaches()
       writeDocs(dir, (0L until 5L).map(i => (i, fluent + i, "en")))
       CorpusSink.publish(spark, dir, out)
       assert(CorpusSink.isPublished(spark, out))
       assert(CorpusSink.validate(spark, out).isEmpty)
       assert(spark.read.parquet(s"$out/data").count() == 5L)
     } finally {
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
@@ -120,7 +119,7 @@ class CorpusSinkSpec extends SparkSpec {
       assert(!CorpusSink.isPublished(spark, out))
       assert(CorpusSink.validate(spark, out).nonEmpty)
     } finally {
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
@@ -137,7 +136,7 @@ class CorpusSinkSpec extends SparkSpec {
       assert(CorpusSink.readLatest(spark, out).count() == 4L)
 
       // corpus grows; a second publish lands gen 2 without touching gen 1
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       writeDocs(dir, (0L until 6L).map(i => (i, fluent + i, "en")))
       assert(CorpusSink.publishVersioned(spark, dir, out) == 2L)
       assert(CorpusSink.latestGeneration(out).contains(2L))
@@ -154,7 +153,7 @@ class CorpusSinkSpec extends SparkSpec {
       // no pointer temp file left behind by the atomic flip
       assert(!new java.io.File(s"$out/_latest.tmp").exists())
     } finally {
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }

@@ -18,7 +18,7 @@ class BigramReportSpec extends SparkSpec {
   }
 
   private def cleanup(dir: String): Unit = {
-    TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -87,7 +87,7 @@ class BigramReportSpec extends SparkSpec {
       // leaves the kept set unchanged
       val kept = bySrc("big").map(_._3).toSet
       val unkept = (0L until 15L).toSet -- kept
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       writeDocs(dir, docs.filterNot(d => d._4 == "big" && d._1 == unkept.head))
       val rows2 = graft.SparkEntry.queries("tx_source_cap")(spark, dir)
         .collect().filter(_.getString(0) == "big").map(_.getLong(2)).toSet

@@ -26,8 +26,7 @@ class Bm25WandSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("wand").toString
     try { writeDocTable(dir, docs); f(dir) }
     finally {
-      Retrieval.clearCaches()
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

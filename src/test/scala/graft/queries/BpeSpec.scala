@@ -20,7 +20,7 @@ class BpeSpec extends SparkSpec {
   }
 
   private def cleanup(dir: String): Unit = {
-    TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -31,8 +31,7 @@ class DeltaMergeSpec extends SparkSpec {
     df.collect().map(_.toString).toSet
 
   private def cleanup(dirs: String*): Unit = {
-    Dedup.clearCaches()
-    TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     dirs.foreach(d =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
@@ -82,7 +81,7 @@ class DeltaMergeSpec extends SparkSpec {
       // identical per-doc-derivation argument
       assert(rows(Positional.mergedBigramIndex(spark, dirA, b)) ==
         rows(Positional.mergedBigramIndex(spark, dirAB, batchDf(Seq.empty))))
-      Positional.clearCaches()
+      graft.core.Memo.clear()
     } finally cleanup(dirA, dirAB)
   }
 
@@ -113,11 +112,11 @@ class DeltaMergeSpec extends SparkSpec {
       assert(mergedDf.filter(col("word") === "a").count() == 2000L)
       assert(mergedDf.filter(col("word") === "a" && col("doc_id") === 1L)
         .count() == 3L, "batch postings missing from the merged cut")
-      Positional.clearCaches()
+      graft.core.Memo.clear()
       val rebuilt = rows(Positional.mergedCappedIndex(spark, dirAB, batchDf(Seq.empty)))
       assert(merged == rebuilt,
         "merged capped lists diverged from the union rebuild")
-      Positional.clearCaches()
+      graft.core.Memo.clear()
     } finally cleanup(dirA, dirAB)
   }
 
@@ -132,7 +131,7 @@ class DeltaMergeSpec extends SparkSpec {
       val b = batchDf(batch)
       val uniMerged = rows(TextAnalysis.mergedUnigramLm(spark, dirA, b))
       val bigMerged = rows(TextAnalysis.mergedBigramLm(spark, dirA, b))
-      TextAnalysis.clearCaches() // force the AB side to build fresh
+      graft.core.Memo.clear() // force the AB side to build fresh
       assert(uniMerged == rows(textUnigram(dirAB)))
       assert(bigMerged == rows(textBigram(dirAB)))
     } finally cleanup(dirA, dirAB)

@@ -32,8 +32,7 @@ class GraphRankSpec extends SparkSpec {
   private def freshDir(docs: Seq[(Long, String, String)]): String = {
     val dir = java.nio.file.Files.createTempDirectory("graphrank").toString
     writeSrcDocs(dir, docs)
-    GraphRank.clearCaches()
-    Dedup.clearCaches()
+    graft.core.Memo.clear()
     dir
   }
 
@@ -171,8 +170,7 @@ class GraphRankSpec extends SparkSpec {
   test("rank computation is deterministic across cache-cleared reruns") {
     val dir = freshDir(plantedDocs)
     val first = GraphRank.queries("gr_source_rank")(spark, dir).collect().toSeq
-    GraphRank.clearCaches()
-    Dedup.clearCaches()
+    graft.core.Memo.clear()
     val second = GraphRank.queries("gr_source_rank")(spark, dir).collect().toSeq
     assert(first == second)
   }

@@ -114,7 +114,7 @@ class IvfScaleSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfscale").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.Memo.clear()
     try {
       val r = Similarity.embCellStats(spark, dir).collect()(0)
       info(s"cells_used=${r.getAs[Long]("cells_used")} " +
@@ -154,7 +154,7 @@ class IvfScaleSpec extends SparkSpec {
       assert(cs.getAs[Long]("fine_cells") > 10L)
       assert(cs.getAs[Long]("fine_dist_rows") < cs.getAs[Long]("flat_dist_rows"))
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -57,7 +57,7 @@ class LangGateSpec extends SparkSpec {
         (6L, dupText, "en")))
       f(dir)
     } finally {
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -23,12 +23,12 @@ class LexLayoutSpec extends SparkSpec {
       0L -> "alpha beta gamma", 1L -> "alpha beta gamma delta",
       2L -> "alpha epsilon", 3L -> "beta zeta", 4L -> "gamma eta",
       5L -> "theta iota kappa", 6L -> "lambda mu nu", 7L -> "xi omicron pi"))
-    Retrieval.clearCaches(); TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     dir
   }
 
   private def cleanup(paths: String*): Unit = {
-    Retrieval.clearCaches(); TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     paths.foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
   }

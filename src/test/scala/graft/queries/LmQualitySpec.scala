@@ -33,7 +33,7 @@ class LmQualitySpec extends SparkSpec {
       // every avg log-probability is strictly negative (probabilities < 1)
       assert(rows.values.forall(_ < 0.0))
     } finally {
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
@@ -52,7 +52,7 @@ class LmQualitySpec extends SparkSpec {
       assert(rows(2L).getDouble(3) == 1.0)
       assert(rows(1L).getLong(2) == 4L) // n_distinct
     } finally {
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
@@ -87,7 +87,7 @@ class LmQualitySpec extends SparkSpec {
         assert(rows((l, "middle"))._2 >= rows((l, "tail"))._3)
       }
     } finally {
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
@@ -115,7 +115,7 @@ class LmQualitySpec extends SparkSpec {
       assert(out(12L)._1 == 0L && out(13L)._1 == 0L && out(14L)._1 == 5L)
       out.values.foreach { case (_, cos) => assert(cos > 0.99) }
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -62,7 +62,7 @@ class PackPropertySpec extends SparkSpec {
     docs.map { case (id, text, m) => (id, text, "xx", "gen", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
 
     val counts = docs.map { case (id, _, m) => (id, m) }
     val wantIdOrder = brutePack(counts)
@@ -74,7 +74,7 @@ class PackPropertySpec extends SparkSpec {
     // the two orders lay out the same token stream differently but must
     // conserve totals
     assert(wantIdOrder.values.map(_._2).sum == wantShuffled.values.map(_._2).sum)
-    TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
   }
 
   test("BPE-billed packing conserves the trained-tokenizer token stream") {
@@ -94,7 +94,7 @@ class PackPropertySpec extends SparkSpec {
       docs.map { case (id, text) => (id, text, "xx", "gen", text.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
 
       val perDoc = graft.SparkEntry.queries("tx_bpe_token_count")(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -110,7 +110,7 @@ class PackPropertySpec extends SparkSpec {
       // billing really differs from whitespace (the reason the query exists)
       assert(perDoc.map(_._3).sum > perDoc.map(_._2).sum)
     } finally {
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

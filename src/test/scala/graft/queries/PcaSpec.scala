@@ -51,7 +51,7 @@ class PcaSpec extends SparkSpec {
       assert(math.abs(corr(a, p)) > 0.99,
         s"projection must recover the planted coefficient, corr=${corr(a, p)}")
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
@@ -111,7 +111,7 @@ class PcaSpec extends SparkSpec {
       assert(recall > 0.6,
         s"grid recall on a rank-2 corpus should be substantial, got $recall")
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
@@ -129,7 +129,7 @@ class PcaSpec extends SparkSpec {
       assert(varRow.getDouble(1) < 3.0 / d,
         s"isotropic corpus must read low variance explained: $varRow")
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -18,7 +18,7 @@ class PositionalSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Positional.clearCaches()
+    graft.core.Memo.clear()
     dir
   }
 
@@ -313,7 +313,7 @@ class PositionalSpec extends SparkSpec {
   test("results are deterministic across cache-cleared reruns") {
     val dir = freshDir(phraseDocs)
     val first = Positional.queries("tx_phrase_search")(spark, dir).collect().toSeq
-    Positional.clearCaches()
+    graft.core.Memo.clear()
     val second = Positional.queries("tx_phrase_search")(spark, dir).collect().toSeq
     assert(first == second)
   }

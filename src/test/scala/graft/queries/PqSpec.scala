@@ -100,7 +100,7 @@ class PqSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("pqclustered").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.Memo.clear()
     try {
       val rec = Similarity.queries("ann_pq_recall")(spark, tmp)
         .agg((sum($"n_common").cast("double") / sum($"n_exact")).as("recall"))
@@ -108,7 +108,7 @@ class PqSpec extends SparkSpec {
       info(f"clustered-corpus PQ recall@5 = $rec%.3f")
       assert(rec >= 0.8, f"PQ recall should be high on clustered data: $rec%.3f")
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }

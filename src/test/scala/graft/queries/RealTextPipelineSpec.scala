@@ -60,7 +60,7 @@ class RealTextPipelineSpec extends SparkSpec {
 
   test("dedup_substring finds the Gutenberg license boilerplate across all 8 books") {
     assume(books.nonEmpty, "reference corpus not present")
-    Dedup.clearCaches()
+    graft.core.Memo.clear()
     val rows = run("dedup_substring").collect()
     assert(rows.nonEmpty, "real books must share duplicated 5-token windows")
     // the license text is common to EVERY book — some window must appear
@@ -207,7 +207,7 @@ class RealTextPipelineSpec extends SparkSpec {
     // (~600k tokens total, the largest ~115k tokens in one document)
     // must score in seconds, bit-identical to the batch scorer's
     // held-out rows. The quadratic form took minutes-to-hours here.
-    Retrieval.clearCaches(); TextAnalysis.clearCaches()
+    graft.core.Memo.clear()
     import org.apache.spark.sql.functions.col
     val t0 = System.nanoTime()
     val stream = graft.streaming.NbScoreStream
@@ -229,18 +229,18 @@ class RealTextPipelineSpec extends SparkSpec {
 
   test("BM25 retrieval runs the real books end to end, probe excluded") {
     assume(books.nonEmpty, "reference corpus not present")
-    Retrieval.clearCaches()
+    graft.core.Memo.clear()
     // only doc 0 is a %50-stride query; its probe is the first 6 tokens
     // of a real book (Gutenberg header boilerplate shared by all books)
     val rows = run("tx_bm25_topk").collect()
     assert(rows.nonEmpty && rows.forall(_.getAs[Long]("qid") == 0L))
     assert(!rows.exists(_.getAs[Long]("doc_id") == 0L), "self-exclusion on real text")
-    Retrieval.clearCaches()
+    graft.core.Memo.clear()
   }
 
   test("phrase + proximity search on real Zipfian text: the Gutenberg header phrase spans books") {
     assume(books.nonEmpty, "reference corpus not present")
-    Positional.clearCaches()
+    graft.core.Memo.clear()
     val t0 = System.nanoTime()
     // doc 0's opening 3 tokens are Gutenberg boilerplate shared across
     // the corpus — the phrase must hit multiple books, and the anchored
@@ -261,6 +261,6 @@ class RealTextPipelineSpec extends SparkSpec {
     // noise, not a signal line — 240 s still separates the classes by
     // an order of magnitude
     assert(sec < 240, f"real-book positional queries took $sec%.0f s")
-    Positional.clearCaches()
+    graft.core.Memo.clear()
   }
 }

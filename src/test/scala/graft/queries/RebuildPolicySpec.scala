@@ -58,9 +58,7 @@ class RebuildPolicySpec extends SparkSpec {
       assert(planted("lexical") == base("lexical"),
         "the lexical verdict (and value) must be untouched by embedding drift")
     } finally {
-      graft.queries.Similarity.clearCaches()
-      graft.queries.Dedup.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }
@@ -115,9 +113,7 @@ class RebuildPolicySpec extends SparkSpec {
       assert(graft.core.Generations.latest(lexRoot).isEmpty)
       assert(graft.core.Generations.latest(vecRoot).isEmpty)
     } finally {
-      graft.queries.Similarity.clearCaches()
-      graft.queries.Dedup.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }
@@ -179,10 +175,7 @@ class RebuildPolicySpec extends SparkSpec {
         Map("lexical" -> lexRoot, "vector" -> vecRoot)).isEmpty)
       assert(graft.core.Generations.latest(lexRoot).contains(2L))
     } finally {
-      graft.queries.Similarity.clearCaches()
-      graft.queries.Dedup.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
-      graft.queries.Retrieval.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }

@@ -46,8 +46,7 @@ class RetrievalSpec extends SparkSpec {
       if (vecs.nonEmpty) writeVecs(dir, vecs)
       f(dir)
     } finally {
-      Retrieval.clearCaches()
-      TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -50,7 +50,7 @@ class SpansPropertySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("spans_prop").toString
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    Dedup.clearCaches()
+    graft.core.Memo.clear()
     try {
       val got = graft.SparkEntry.queries("dedup_spans")(spark, dir)
         .collect()
@@ -61,7 +61,7 @@ class SpansPropertySpec extends SparkSpec {
         s"missing=${want -- got} extra=${got -- want}")
       assert(want.nonEmpty, "the planted passage must produce spans")
     } finally {
-      Dedup.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

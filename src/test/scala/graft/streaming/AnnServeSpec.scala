@@ -424,7 +424,7 @@ class AnnServeSpec extends SparkSpec {
     assert(new java.io.File(s"$root/gen-3").isDirectory
       && new java.io.File(s"$root/gen-4").isDirectory)
 
-    Similarity.clearCaches()
+    graft.core.Memo.clear()
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
   }
 
@@ -446,7 +446,7 @@ class AnnServeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("annloop").toString
     all.filter(!$"vec_id".isin(ids.toSeq: _*))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.Memo.clear()
     try {
       val centroids = Similarity.trainedCentroidArrays(spark, dir)
       val codebook = Similarity.pqCodebookArrays(spark, dir)
@@ -502,7 +502,7 @@ class AnnServeSpec extends SparkSpec {
           s"held-out vector $id: top-1 cos ${r.get.cos} != 1.0")
       }
     } finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
@@ -527,10 +527,10 @@ class AnnServeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("annserve").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.Memo.clear()
     try checkServeParity(dir, "ann_pq_serve_split")
     finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

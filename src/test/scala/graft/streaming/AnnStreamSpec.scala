@@ -126,10 +126,10 @@ class AnnStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("annstream").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.Memo.clear()
     try checkParity(dir, "ann_ingest_split")
     finally {
-      Similarity.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -101,17 +101,16 @@ class Bm25StreamSpec extends SparkSpec {
       }.queryName("bm25_gen_serve").start()
 
       in.addData(qdocs(dirA): _*); q.processAllAvailable()
-      graft.queries.Retrieval.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       assert(graft.queries.Retrieval.writeLexicalGeneration(spark, dirB, root) == 2L)
       in.addData(qdocs(dirB): _*); q.processAllAvailable()
       q.stop()
 
       // batch 0 served under gen 1 (corpus A), batch 1 under gen 2 (B)
-      graft.queries.Retrieval.clearCaches(); graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       val a = served.filter(_._1 == 0L).map(_._2).map(t => (t._1, t._2, t._3, t._4)).toSet
       assert(a == impactRows(dirA), "pre-flip batch must serve generation 1")
-      graft.queries.Retrieval.clearCaches(); graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       val b = served.filter(_._1 == 1L).map(_._2).map(t => (t._1, t._2, t._3, t._4)).toSet
       assert(b == impactRows(dirB), "post-flip batch must serve generation 2")
       // nothing truncates on these corpora: every answer certified exact
@@ -120,8 +119,7 @@ class Bm25StreamSpec extends SparkSpec {
       assert(graft.core.Generations.prune(root, 1) == Seq(1L))
       assert(graft.core.Generations.latest(root).contains(2L))
     } finally {
-      graft.queries.Retrieval.clearCaches()
-      graft.queries.TextAnalysis.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }

@@ -198,7 +198,7 @@ class DedupStreamSpec extends SparkSpec {
         1000001L -> "w1 w2 w3 w4 w5 w6 w7 w8",
         1000002L -> "x1 x2 x3 x4 x5 x6 x7 x8",
         1000003L -> "y1 y2 y3 y4 y5 y6 y7 y8"))
-      Dedup.clearCaches()
+      graft.core.Memo.clear()
       assert(Dedup.writeBandGeneration(spark, dirB, root) == 2L)
       val before = served.size
       // a near-dup of corpus B's doc 1000001 (7 of its 8 tokens): no
@@ -210,7 +210,7 @@ class DedupStreamSpec extends SparkSpec {
         s"expected the post-flip batch to match corpus B, got $fresh")
       assert(fresh.head._3 >= 0.5)
     } finally {
-      Dedup.clearCaches()
+      graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }

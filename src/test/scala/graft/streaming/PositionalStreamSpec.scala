@@ -183,7 +183,7 @@ class PositionalStreamSpec extends SparkSpec {
         0L -> "alpha beta gamma x", 1L -> "y alpha beta gamma", 2L -> "z z z z"))
       writeDocTable(dirB, Seq(
         0L -> "q q q q", 2L -> "alpha beta gamma q"))
-      Positional.clearCaches()
+      graft.core.Memo.clear()
       Positional.writePositionalGeneration(spark, dirA, root)
 
       val served = mutable.Buffer.empty[(Long, Long, Long, Int)]
@@ -198,12 +198,12 @@ class PositionalStreamSpec extends SparkSpec {
       assert(served.map(_._2).toSet == Set(0L, 1L), s"gen-1 answers: $served")
 
       served.clear()
-      Positional.clearCaches()
+      graft.core.Memo.clear()
       Positional.writePositionalGeneration(spark, dirB, root)
       in.addData((101L, "alpha beta gamma")); q.processAllAvailable()
       q.stop()
       assert(served.map(_._2).toSet == Set(2L), s"post-cutover answers: $served")
-    } finally Positional.clearCaches()
+    } finally graft.core.Memo.clear()
   }
 
   test("the auto serving stream answers multi-token phrases through the " +
@@ -215,7 +215,7 @@ class PositionalStreamSpec extends SparkSpec {
     try {
       writeDocTable(dirA, Seq(
         0L -> "alpha beta gamma x", 1L -> "y alpha beta gamma", 2L -> "x y alpha"))
-      Positional.clearCaches()
+      graft.core.Memo.clear()
       Positional.writePositionalGeneration(spark, dirA, root)
 
       val served = mutable.Buffer.empty[(Long, Long, Long, Int, Long, String)]
@@ -237,6 +237,6 @@ class PositionalStreamSpec extends SparkSpec {
       // 1-token phrase: tf ranking through the word route
       assert(served.filter(_._1 == 101L).map(_._2).toSet == Set(0L, 1L, 2L))
       assert(served.filter(_._1 == 101L).forall(t => t._5 == 1L && t._6 == "word"))
-    } finally Positional.clearCaches()
+    } finally graft.core.Memo.clear()
   }
 }
