@@ -6,6 +6,7 @@ import java.nio.file.attribute.BasicFileAttributes
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Durable staged-index store: the dedup/ANN index builds (MinHash band
   * index, kept-shingle index/sets, passage window index, trained IVF
@@ -20,7 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-run that job per process.
   *
   * Layout: `$SPARK_GRAFT_STAGE_DIR/<corpus>-<fingerprint>/<artifact>`
-  * (default root `/tmp/graft_stage`). The fingerprint folds in
+  * (default root `/tmp/graft_stage`); each generation dir holds a
+  * `.corpus` marker naming its corpus dir, and each artifact dir holds
+  * its parquet files, `_SUCCESS` and `_schema.json` — the build's
+  * schema, committed with the data, from which every open of the
+  * artifact reads it (no schema-inference job; Spark's file listing
+  * skips `_`-prefixed files). The fingerprint folds in
   *  - the absolute corpus dir and [[tableSignature]] — the (name, size,
   *    mtime) of every file of the source tables the artifacts derive
   *    from, the same generation rule the session memos ([[Memo]])
@@ -33,7 +39,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * resolves to one winner and readers never see partial artifacts; any
   * staging I/O failure falls back to the in-memory build (staging is an
   * accelerator, never a correctness dependency). Stale generations of
-  * the same corpus are pruned best-effort on write.
+  * the same corpus (by `.corpus` marker) and generations whose corpus is
+  * gone are pruned best-effort on write.
   *
   * `SPARK_GRAFT_STAGE=0` disables the layer (pure session-scoped
   * behavior, e.g. for measuring cold builds).
@@ -44,7 +51,7 @@ object Staging {
     * constants, band shape, quantizer structure, PQ dims, …) — the cheap
     * global alternative to per-artifact schema hashes.
     */
-  val FormatVersion = "r11-1" // r11-1: PQ radial-split codebook (PqMagBits=3, 1 Lloyd round)
+  val FormatVersion = "r11-2" // r11-2: artifacts carry `_schema.json`, and opens read only that schema
 
   @volatile private var disabledInProcess = false
 
@@ -67,17 +74,24 @@ object Staging {
     */
   private val FingerprintTables = Seq("documents", "embeddings")
 
-  /** Stable per-(corpus generation) directory name: a readable corpus
+  /** The build's schema, committed inside each artifact dir. */
+  private val SchemaFile = "_schema.json"
+
+  private def corpusPath(dir: String): String =
+    Paths.get(dir).toAbsolutePath.normalize.toString
+
+  /** The store dir of `dir`'s current corpus generation:
+    * `<root>/<slug>-<fp>`, a readable (truncated, so not unique) corpus
     * slug plus a content fingerprint of the fingerprint tables.
     */
-  private def generationDir(dir: String): (String, String) = {
-    val abs = Paths.get(dir).toAbsolutePath.normalize.toString
+  private[core] def generationPath(dir: String): Path = {
+    val abs = corpusPath(dir)
     val slug = abs.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").take(80)
     val sig = s"$abs|$FormatVersion" + tableSignature(Paths.get(abs), FingerprintTables)
     val md = java.security.MessageDigest.getInstance("MD5")
     val fp = md.digest(sig.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    (slug, fp)
+    Paths.get(root, s"$slug-$fp")
   }
 
   /** The corpus-generation rule shared by this store and the session
@@ -118,8 +132,7 @@ object Staging {
     */
   def isWarm(dir: String): Boolean =
     enabled && (try {
-      val (slug, fp) = generationDir(dir)
-      val gen = Paths.get(root, s"$slug-$fp")
+      val gen = generationPath(dir)
       Files.isDirectory(gen) &&
         withStream(Files.list(gen))(
           _.exists(p => Files.exists(p.resolve("_SUCCESS"))))
@@ -149,28 +162,26 @@ object Staging {
       build: => DataFrame): DataFrame = {
     if (!enabled) return build
     val dest =
-      try {
-        val (slug, fp) = generationDir(dir)
-        Paths.get(root, s"$slug-$fp", name)
-      } catch { case NonFatal(_) => return build }
+      try generationPath(dir).resolve(name)
+      catch { case NonFatal(_) => return build }
     try {
       if (Files.exists(dest.resolve("_SUCCESS")))
-        return s.read.parquet(dest.toString)
+        return openStaged(s, dest)
     } catch { case NonFatal(_) => () }
     val df = build
     try {
       val gen = dest.getParent
-      pruneStaleGenerations(gen)
-      pruneOrphanGenerations()
+      val corpus = corpusPath(dir)
+      pruneGenerations(gen, corpus)
       Files.createDirectories(gen)
-      // record the corpus path so generations whose corpus is GONE (e.g.
-      // spec-created temp dirs, deleted after the suite) can be swept —
-      // their unique paths mean the same-slug prune never fires for them
-      try Files.writeString(gen.resolve(".corpus"),
-        Paths.get(dir).toAbsolutePath.normalize.toString)
+      // the marker is how pruning tells this corpus's generations from
+      // those of another corpus with the same (truncated) slug, and
+      // sweeps generations whose corpus is gone (spec temp dirs)
+      try Files.writeString(gen.resolve(".corpus"), corpus)
       catch { case NonFatal(_) => () }
       val tmp = gen.resolve(s".${name}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
       df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
+      Files.writeString(tmp.resolve(SchemaFile), df.schema.json)
       try Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: java.io.IOException =>
@@ -179,9 +190,19 @@ object Staging {
           deleteRecursively(tmp)
           if (!Files.exists(dest.resolve("_SUCCESS"))) return df
       }
-      s.read.parquet(dest.toString)
+      openStaged(s, dest)
     } catch { case NonFatal(_) => df }
   }
+
+  /** A scan of the committed artifact at `dest` under the schema its
+    * build recorded — the one way an artifact is opened. Spark makes the
+    * data columns nullable, as inference would; partition columns take
+    * the recorded type instead of the one inferred from directory names.
+    */
+  private[core] def openStaged(s: SparkSession, dest: Path): DataFrame =
+    s.read
+      .schema(DataType.fromJson(Files.readString(dest.resolve(SchemaFile))).asInstanceOf[StructType])
+      .parquet(dest.toString)
 
   /** A FRESH parquet scan of an already-staged artifact, or None when
     * the store holds no committed copy (disabled layer, cold store, or
@@ -194,49 +215,29 @@ object Staging {
     if (!enabled) None
     else
       try {
-        val (slug, fp) = generationDir(dir)
-        val dest = Paths.get(root, s"$slug-$fp", name)
-        if (Files.exists(dest.resolve("_SUCCESS")))
-          Some(s.read.parquet(dest.toString))
+        val dest = generationPath(dir).resolve(name)
+        if (Files.exists(dest.resolve("_SUCCESS"))) Some(openStaged(s, dest))
         else None
       } catch { case NonFatal(_) => None }
 
-  /** Best-effort removal of OTHER generations of the same corpus slug —
-    * the driver regenerates testdata between rounds and the superseded
-    * fingerprint dirs would otherwise accumulate forever.
+  /** Best-effort removal of every generation other than `gen` whose
+    * `.corpus` marker names `corpus` (superseded by a regenerated
+    * corpus) or a corpus dir that no longer exists
+    * (typically spec temp corpora). Slugs are truncated, so two corpora
+    * may share one; only the marker tells them apart. Piggybacked on
+    * artifact writes, never on the read path.
     */
-  private def pruneStaleGenerations(gen: Path): Unit =
+  private def pruneGenerations(gen: Path, corpus: String): Unit =
     try {
-      val slug = gen.getFileName.toString.dropRight(17) // strip "-<16-hex fp>"
-      val parent = gen.getParent
-      if (slug.nonEmpty && Files.isDirectory(parent)) {
-        withStream(Files.list(parent))(
-          _.filter(p => p != gen && Files.isDirectory(p))
-            .filter(_.getFileName.toString.startsWith(slug + "-"))
-            // same slug, different fingerprint = a superseded generation
-            .filter(_.getFileName.toString.length == gen.getFileName.toString.length)
-            .foreach(deleteRecursively))
-      }
-    } catch { case NonFatal(_) => () }
-
-  /** Sweep generations whose recorded corpus dir no longer exists —
-    * typically staged copies of test-suite temp corpora. Best-effort,
-    * piggybacked on artifact writes (never on the read path).
-    */
-  private def pruneOrphanGenerations(): Unit =
-    try {
-      val rootP = Paths.get(root)
+      val rootP = gen.getParent
       if (Files.isDirectory(rootP)) {
         withStream(Files.list(rootP))(
-          _.filter(Files.isDirectory(_))
-            .foreach { gen =>
-              val marker = gen.resolve(".corpus")
-              if (Files.isRegularFile(marker)) {
-                val corpus = try Files.readString(marker).trim
-                  catch { case NonFatal(_) => "" }
-                if (corpus.nonEmpty && !Files.exists(Paths.get(corpus)))
-                  deleteRecursively(gen)
-              }
+          _.filter(p => p != gen && Files.isRegularFile(p.resolve(".corpus")))
+            .foreach { other =>
+              val owner = try Files.readString(other.resolve(".corpus")).trim
+                catch { case NonFatal(_) => "" }
+              if (owner == corpus || (owner.nonEmpty && !Files.exists(Paths.get(owner))))
+                deleteRecursively(other)
             })
       }
     } catch { case NonFatal(_) => () }

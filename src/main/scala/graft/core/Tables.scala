@@ -7,9 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every query in the library takes `(SparkSession, sfDir)` and resolves
   * tables through here, so filters/projections stay declarative and reach
   * the parquet scan (predicate pushdown + column pruning).
+  *
+  * Each table handle is a session memo ([[Memo]], `Tables.<name>`): the
+  * schema-inference job Spark runs on opening a parquet path runs once
+  * per corpus generation, not on every access.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame =
+    Memo(spark, dir, s"Tables.$name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   /** events.parquet's `ts` column layout has drifted across testdata
     * generations — TIMESTAMP(NANOS) (which Spark's vectorized reader only

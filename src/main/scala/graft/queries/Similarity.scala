@@ -2050,8 +2050,8 @@ object Similarity {
       // [[writeServingIndex]] already commits for the streaming twin) so
       // a batch query's probed cells prune the scan at planning — see
       // [[pqServingCells]]. The select normalizes the partitioned
-      // read-back (directory column comes back int-typed and last) to
-      // the build's exact schema, so every consumer sees one shape.
+      // read-back (the partition column comes back last) to the build's
+      // exact column order, so every consumer sees one shape.
       Staging.readElseBuild(s, dir, s"pq_serving_index_$PqParams",
           Seq("embeddings"), partitionCols = Seq("cell")) {
         vecs(s, dir).select($"vec_id", $"embedding", $"norm2")

@@ -68,8 +68,10 @@ class MemoSpec extends SparkSpec {
     try {
       writeCorpus(dir, 600, seed = 1)
       val before = queries.map(q => q -> rows(q, dir)).toMap
+      assert(Tables(spark, dir).documents.count() == 600)
       writeCorpus(dir, 2600, seed = 2)
       writeCorpus(fresh, 2600, seed = 2)
+      assert(Tables(spark, dir).documents.count() == 2600, "the table handle kept the old corpus")
       queries.foreach { q =>
         val after = rows(q, dir)
         assert(after != before(q), s"$q: the rewrite must change the answer")

@@ -1,6 +1,12 @@
 package graft.core
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.LinkedBlockingQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.SparkSpec
 
@@ -9,8 +15,11 @@ import graft.SparkSpec
   *  - a corpus regeneration (content change) MISSES — staging must never
   *    serve a previous generation's index against new data (the driver
   *    rewrites /root/testdata between rounds),
-  *  - superseded generations are pruned,
-  *  - staging failures degrade to the in-memory build, never to an error.
+  *  - superseded generations are pruned, and only those of the same
+  *    corpus,
+  *  - staging failures degrade to the in-memory build, never to an error,
+  *  - a committed artifact, and a table already opened in the session,
+  *    opens without a Spark job (no schema inference).
   */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -18,6 +27,31 @@ class StagingSpec extends SparkSpec {
   private def writeCorpus(dir: String, docs: Seq[(Long, String)]): Unit =
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
+
+  /** `f`'s result and the Spark jobs it launches. A marker job run
+    * afterwards closes the window: the listener bus delivers events in
+    * order, so once the marker's start arrives, every earlier job's has.
+    */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).exists(_.getProperty("staging.spec.marker") != null))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      sc.setLocalProperty("staging.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("staging.spec.marker", null)
+      (a, Iterator.continually(starts.take()).takeWhile(!_).size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def slugOf(dir: String): String =
+    Paths.get(dir).toAbsolutePath.normalize.toString
+      .replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").take(80)
 
   test("read-else-build stages once, then serves identical values") {
     assume(Staging.enabled, "staging disabled in this JVM")
@@ -52,9 +86,7 @@ class StagingSpec extends SparkSpec {
       writeCorpus(dir, (0L until 5L).map(i => (i, s"second generation doc $i")))
       assert(count() == 5, "stale staged artifact served after corpus regeneration")
       // exactly one generation dir remains for this corpus slug
-      val slugPrefix = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-        .replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").take(80)
-      import scala.jdk.CollectionConverters._
+      val slugPrefix = slugOf(dir)
       val gens = Files.list(java.nio.file.Paths.get(Staging.root)).iterator().asScala
         .filter(_.getFileName.toString.startsWith(slugPrefix + "-")).toSeq
       assert(gens.size == 1, s"superseded generation not pruned: $gens")
@@ -77,12 +109,10 @@ class StagingSpec extends SparkSpec {
       val threads = (1 to 2).map(_ => new Thread(() => run()))
       threads.foreach(_.start()); threads.foreach(_.join())
       assert(errors.isEmpty, s"racing builder threw: ${errors.peek()}")
-      import scala.jdk.CollectionConverters._
       val rs = results.asScala.toSeq
       assert(rs.size == 2 && rs.forall(_ == (0L until 30L).toSet))
       // exactly one committed artifact, no leftover temp dirs
-      val slug = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-        .replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").take(80)
+      val slug = slugOf(dir)
       val gen = Files.list(java.nio.file.Paths.get(Staging.root)).iterator().asScala
         .filter(_.getFileName.toString.startsWith(slug + "-")).toSeq
       assert(gen.size == 1)
@@ -141,5 +171,76 @@ class StagingSpec extends SparkSpec {
       graft.core.Memo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  test("two corpora sharing a truncated slug keep each other's generations") {
+    assume(Staging.enabled, "staging disabled in this JVM")
+    val base = Files.createTempDirectory("staging_slug")
+    val long = base.resolve("c" * 100)
+    val (a, b) = (long.resolve("a").toString, long.resolve("b").toString)
+    assert(slugOf(a) == slugOf(b), "the corpora must share their slug")
+    try {
+      Seq(a, b).foreach(d => writeCorpus(d, Seq((1L, s"corpus $d"))))
+      var builds = 0
+      def stage(d: String) = Staging.readElseBuild(spark, d, "probe", Seq("documents")) {
+        builds += 1
+        spark.read.parquet(s"$d/documents.parquet").selectExpr("doc_id")
+      }.count()
+      stage(a); stage(b); stage(a); stage(b)
+      assert(builds == 2, "staging one corpus pruned the other's generation")
+      assert(Files.isDirectory(Staging.generationPath(a)))
+      assert(Files.isDirectory(Staging.generationPath(b)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+  }
+
+  test("opening a staged artifact or an opened table launches no Spark job") {
+    assume(Staging.enabled, "staging disabled in this JVM")
+    val dir = Files.createTempDirectory("staging_jobs").toString
+    writeCorpus(dir, (0L until 20L).map(i => (i, s"doc $i")))
+    try {
+      val df = (0 until 20).map(i => (i.toLong, i % 3)).toDF("doc_id", "b")
+      val (_, writeJobs) = withJobCount(df.write.parquet(s"$dir/plain_write"))
+      var builds = 0
+      def stage() = Staging.readElseBuild(spark, dir, "jobs_probe", Seq("documents")) {
+        builds += 1
+        df
+      }
+      assert(withJobCount(stage())._2 == writeJobs, "the cold read-back ran a job")
+      Memo.clear()
+      val (hit, hitJobs) = withJobCount(stage())
+      assert(hitJobs == 0, "the hit ran a job")
+      assert(builds == 1)
+      assert(hit.schema == StructType(df.schema.map(_.copy(nullable = true))))
+      assert(hit.as[(Long, Int)].collect().toSet == df.as[(Long, Int)].collect().toSet)
+      Tables(spark, dir).documents
+      assert(withJobCount(Tables(spark, dir).documents)._2 == 0,
+        "a second table access ran a job")
+    } finally {
+      Memo.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("every artifact stageAll commits opens with its inferred schema") {
+    // the partition column `cell` is the one intended difference: the
+    // recorded schema keeps the build's long where inference from
+    // directory names reads int
+    assume(Staging.enabled, "staging disabled in this JVM")
+    val dir = "perfbench/data/sf0.001"
+    assume(Files.isDirectory(Paths.get(dir)), s"$dir not found")
+    def cellAsLong(t: StructType) =
+      StructType(t.map(f => if (f.name == "cell") f.copy(dataType = LongType) else f))
+    try {
+      graft.StageIndexes.stageAll(spark, dir)
+      val artifacts: Seq[Path] = Staging.withStream(Files.list(Staging.generationPath(dir)))(
+        _.filter(p => Files.exists(p.resolve("_SUCCESS"))).toList)
+      assert(artifacts.size >= 40, s"only ${artifacts.size} artifacts committed")
+      artifacts.foreach { p =>
+        val recorded = Staging.openStaged(spark, p).schema
+        val inferred = spark.read.parquet(p.toString).schema
+        assert(cellAsLong(recorded) == cellAsLong(inferred),
+          s"${p.getFileName}: recorded $recorded, inferred $inferred")
+      }
+    } finally Memo.clear()
   }
 }
