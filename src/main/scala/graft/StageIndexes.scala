@@ -15,16 +15,19 @@ import org.apache.spark.sql.SparkSession
   */
 object StageIndexes {
 
-  /** Stage every dedup + ANN + text-accounting + media artifact for `dir`. */
-  def stageAll(s: SparkSession, dir: String): Unit = {
-    graft.queries.Dedup.stageIndexes(s, dir)
-    graft.queries.Positional.stageIndexes(s, dir)
-    graft.queries.Similarity.stageIndexes(s, dir)
-    graft.queries.TextAnalysis.stageIndexes(s, dir)
-    graft.multimodal.Multimodal.mediaTable(s, dir)
-    graft.queries.MultimodalQueries.stageIndexes(s, dir)
-    graft.queries.Retrieval.stageIndexes(s, dir)
-  }
+  /** Stage every dedup + ANN + text-accounting + media artifact for
+    * `dir`: the seven module builds run concurrently, each building its
+    * own artifacts concurrently ([[graft.core.Staging.buildAll]]).
+    */
+  def stageAll(s: SparkSession, dir: String): Unit =
+    graft.core.Staging.buildAll(s)(
+      () => graft.queries.Dedup.stageIndexes(s, dir),
+      () => graft.queries.Positional.stageIndexes(s, dir),
+      () => graft.queries.Similarity.stageIndexes(s, dir),
+      () => graft.queries.TextAnalysis.stageIndexes(s, dir),
+      () => graft.multimodal.Multimodal.mediaTable(s, dir),
+      () => graft.queries.MultimodalQueries.stageIndexes(s, dir),
+      () => graft.queries.Retrieval.stageIndexes(s, dir))
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(

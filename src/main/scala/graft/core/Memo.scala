@@ -35,23 +35,31 @@ object Memo {
   private final case class Entry(generation: String, value: Any)
 
   private val entries = TrieMap.empty[Key, Entry]
+  private val locks = TrieMap.empty[Key, AnyRef]
 
   /** The value memoized under `name` for `dir`'s current corpus
-    * generation, else `build`'s result, stored. Builds run outside any
-    * lock (they nest: most memos are built from other memos); of two
-    * racing builds, the first stored wins and both callers get it.
+    * generation, else `build`'s result, stored. A hit takes no lock. A
+    * miss is single-flight: it takes the key's lock, re-checks, and only
+    * then builds, so a concurrent caller of the same key waits and gets
+    * the stored value. Builds nest (most memos are built from other
+    * memos) while holding their own key's lock; the memo graph has no
+    * cycles, so nested builds of different keys cannot deadlock.
     */
   def apply[A](s: SparkSession, dir: String, name: String)(build: => A): A = {
     val key = Key(s, dir, name)
     val gen = generation(dir)
     entries.get(key) match {
       case Some(e) if e.generation == gen => e.value.asInstanceOf[A]
-      case stale =>
-        stale.foreach(e => if (entries.remove(key, e)) release(e.value))
-        val v = build
-        entries.putIfAbsent(key, Entry(gen, v)) match {
-          case Some(e) if e.generation == gen => e.value.asInstanceOf[A]
-          case _ => v
+      case _ =>
+        locks.getOrElseUpdate(key, new AnyRef).synchronized {
+          entries.get(key) match {
+            case Some(e) if e.generation == gen => e.value.asInstanceOf[A]
+            case stale =>
+              stale.foreach(e => if (entries.remove(key, e)) release(e.value))
+              val v = build
+              entries.put(key, Entry(gen, v))
+              v
+          }
         }
     }
   }
@@ -66,12 +74,15 @@ object Memo {
       .map(_.value.asInstanceOf[A])
 
   /** Drop and release every entry whose name starts with `owner + "."`
-    * (every entry when `owner` is empty).
+    * (every entry when `owner` is empty), and the per-key locks of those
+    * names.
     */
-  def clear(owner: String = ""): Unit =
-    entries.keys
-      .filter(k => owner.isEmpty || k.name.startsWith(owner + "."))
+  def clear(owner: String = ""): Unit = {
+    def owned(k: Key) = owner.isEmpty || k.name.startsWith(owner + ".")
+    locks.keys.filter(owned).foreach(locks.remove)
+    entries.keys.filter(owned)
       .foreach(k => entries.remove(k).foreach(e => release(e.value)))
+  }
 
   /** [[Staging.tableSignature]] over every `*.parquet` table under `dir`;
     * empty for a dir that is not a readable directory.

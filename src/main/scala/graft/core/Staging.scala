@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.util.control.NonFatal
 
@@ -41,6 +42,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * accelerator, never a correctness dependency). Stale generations of
   * the same corpus (by `.corpus` marker) and generations whose corpus is
   * gone are pruned best-effort on write.
+  *
+  * A module's index build ([[buildAll]]) runs its artifact builds
+  * concurrently, like the reference master handing out a phase's
+  * independent tasks at once (`mr/master.go:36-127`): the builds share
+  * their intermediates through the single-flight session memos
+  * ([[Memo]]), so an intermediate two builds need is built once, and a
+  * build that needs another's output waits for it.
   *
   * `SPARK_GRAFT_STAGE=0` disables the layer (pure session-scoped
   * behavior, e.g. for measuring cold builds).
@@ -146,6 +154,27 @@ object Staging {
       f: Iterator[Path] => A): A = {
     import scala.jdk.CollectionConverters._
     try f(s.iterator().asScala) finally s.close()
+  }
+
+  /** Run `builds` concurrently on a pool of `min(#builds,
+    * defaultParallelism)` threads made for this call, wait for every one,
+    * then rethrow the first failure (in argument order): no build
+    * outlives the call. The pool's threads are started from the caller's
+    * thread, so their Spark jobs carry its local properties (job group,
+    * description).
+    */
+  def buildAll(s: SparkSession)(builds: (() => Any)*): Unit = {
+    val width = math.min(builds.length, s.sparkContext.defaultParallelism)
+    if (width <= 1) { builds.foreach(_()); return }
+    val pool = Executors.newFixedThreadPool(width)
+    try {
+      val pending = builds.map(b => pool.submit(new Callable[Any] { def call(): Any = b() }))
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(throw _)
+    } finally pool.shutdownNow()
   }
 
   /** Read the named artifact for this corpus generation if staged, else

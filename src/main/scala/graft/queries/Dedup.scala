@@ -225,19 +225,19 @@ object Dedup {
     * re-runs, incremental probes, the streaming twin) starts from the
     * stored artifacts.
     */
-  def stageIndexes(s: SparkSession, dir: String): Unit = {
-    hotShingles(s, dir)
-    shingleIndex(s, dir)
-    minhashBandIndex(s, dir)
-    keptSets(s, dir)
-    windowIndex(s, dir)
-    prefixIndex(s, dir)
-    clusterLabels(s, dir)
-    simhashBands0(s, dir)
-    interIndex(s, dir)
-    prefixCandidates(s, dir)
-    prefixInter(s, dir)
-  }
+  def stageIndexes(s: SparkSession, dir: String): Unit =
+    Staging.buildAll(s)(
+      () => hotShingles(s, dir),
+      () => shingleIndex(s, dir),
+      () => minhashBandIndex(s, dir),
+      () => keptSets(s, dir),
+      () => windowIndex(s, dir),
+      () => prefixIndex(s, dir),
+      () => clusterLabels(s, dir),
+      () => simhashBands0(s, dir),
+      () => interIndex(s, dir),
+      () => prefixCandidates(s, dir),
+      () => prefixInter(s, dir))
 
   /** Shared persisted pair-intersection table (ia < ib, shared-shingle
     * count): the one genuinely expensive join of the shingle dedup

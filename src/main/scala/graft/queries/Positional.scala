@@ -69,14 +69,13 @@ object Positional {
 
   /** Force-build the positional family's durable artifacts for `dir` —
     * the index-build half of the capped tier's production split. */
-  def stageIndexes(s: SparkSession, dir: String): Unit = {
-    positionalIndex(s, dir)
-    cappedIndex(s, dir)
-    bigramIndex(s, dir)
-    positionalCf(s, dir)
-    bigramCf(s, dir)
-    ()
-  }
+  def stageIndexes(s: SparkSession, dir: String): Unit =
+    Staging.buildAll(s)(
+      () => positionalIndex(s, dir),
+      () => cappedIndex(s, dir),
+      () => bigramIndex(s, dir),
+      () => positionalCf(s, dir),
+      () => bigramCf(s, dir))
 
   /** The STAGED per-word posting-count table (word, df) of the
     * positional index — the per-list length metadata a production

@@ -785,15 +785,14 @@ object Retrieval {
   }
 
   /** Force-build the retrieval family's durable artifacts for `dir`. */
-  def stageIndexes(s: SparkSession, dir: String): Unit = {
-    impactIndex(s, dir)
-    stagedBounds(s, dir)
-    qlImpactIndex(s, dir)
-    qlStagedBounds(s, dir)
-    incBaseAggs(s, dir)
-    nbModel(s, dir)
-    ()
-  }
+  def stageIndexes(s: SparkSession, dir: String): Unit =
+    Staging.buildAll(s)(
+      () => impactIndex(s, dir),
+      () => stagedBounds(s, dir),
+      () => qlImpactIndex(s, dir),
+      () => qlStagedBounds(s, dir),
+      () => incBaseAggs(s, dir),
+      () => nbModel(s, dir))
 
   /** Write the NEXT lexical serving generation under `root` and flip
     * the `_latest` pointer atomically — the lexical twin of

@@ -63,11 +63,16 @@ object Similarity {
     */
   private[graft] val LshTables = 4
 
-  /** Sign-LSH bucket of dims off+1..off+8: Σ 2^(i-1)·[e_{off+i} > 0]. */
+  /** Sign-LSH bucket of dims off+1..off+8: Σ 2^(i-1)·[e_{off+i} > 0].
+    * The transform runs over the slice itself, so the vector is an
+    * argument of the expression, not only a lambda-body reference: with
+    * a constant argument, the self-joins of [[vecs]] (probes against the
+    * corpus) intermittently got a bucket filter pushed to the wrong join
+    * side when queries were planned concurrently.
+    */
   private def signBucketAt(e: Column, off: Int): Column = aggregate(
-    transform(sequence(lit(1), lit(8)),
-      i => when(element_at(e, i + lit(off)) > 0f,
-        pow(lit(2), i - 1).cast("long")).otherwise(0L)),
+    transform(slice(e, off + 1, 8),
+      (x, i) => when(x > 0f, pow(lit(2), i).cast("long")).otherwise(0L)),
     lit(0L), (acc, v) => acc + v)
 
   /** Sign-LSH bucket of dims 1..8: Σ 2^(i-1)·[e_i > 0]. */
@@ -1366,13 +1371,13 @@ object Similarity {
     * per-vector PQ codes, and the PCA axis. Read-else-build —
     * already-staged artifacts cost one parquet footer read.
     */
-  def stageIndexes(s: SparkSession, dir: String): Unit = {
-    trainedCentroids(s, dir)
-    pqCodebook(s, dir)
-    pqCodes(s, dir)
-    pqServingIndex(s, dir)
-    pcaAxis(s, dir)
-  }
+  def stageIndexes(s: SparkSession, dir: String): Unit =
+    Staging.buildAll(s)(
+      () => trainedCentroids(s, dir),
+      () => pqCodebook(s, dir),
+      () => pqCodes(s, dir),
+      () => pqServingIndex(s, dir),
+      () => pcaAxis(s, dir))
 
   /** Drop and release this module's session memos ([[Memo]]). */
   def clearCaches(): Unit = Memo.clear("Similarity")
@@ -1771,15 +1776,20 @@ object Similarity {
       // magnitude bits halve the radial spread within each orthant (the
       // measured recall lever on this near-isotropic corpus, where
       // rotations have nothing to concentrate — see SCALING.md round 11).
+      // Each round's thresholds (at most PqM·2^(PqBits+PqMagBits-1)
+      // values) are collected and applied as a literal lookup: joining
+      // the round's aggregate back into `acc` would copy every earlier
+      // round into the plan, doubling it per round.
+      val groups = 1 << (PqBits + PqMagBits)
       (1 to PqMagBits).foldLeft(base) { (acc, j) =>
         val thr = acc.groupBy($"m", $"seed")
           .agg((sum($"n2".cast("decimal(27,10)")).cast("double")
             / count(lit(1))).as("thr"))
-        acc.join(broadcast(thr), Seq("m", "seed"))
-          .withColumn("seed",
-            $"seed" + when($"n2" > $"thr",
-              lit(1 << (PqBits + j - 1))).otherwise(lit(0)))
-          .drop("thr")
+          .as[(Int, Int, Double)].collect()
+          .map { case (m, seed, t) => (m * groups + seed) -> t }.toMap
+        acc.withColumn("seed",
+          $"seed" + when($"n2" > element_at(typedLit(thr), $"m" * groups + $"seed"),
+            lit(1 << (PqBits + j - 1))).otherwise(lit(0)))
       }.select($"vec_id", $"m", $"seed", $"sub").persist()
     }
 

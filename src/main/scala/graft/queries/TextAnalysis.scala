@@ -677,18 +677,18 @@ object TextAnalysis {
     * curated-survivor table, the term-frequency table, and the unigram
     * and bigram language models.
     */
-  def stageIndexes(s: SparkSession, dir: String): Unit = {
-    tokenCounts(s, dir)
-    curationSurvivors(s, dir)
-    termFreqs(s, dir)
-    unigramLm(s, dir)
-    dsirRatio(s, dir)
-    bigramLm(s, dir)
-    bpeArtifacts(s, dir)
-    bpeDocCounts(s, dir)
-    hashedBigramCounts(s, dir)
-    gram4Index(s, dir)
-  }
+  def stageIndexes(s: SparkSession, dir: String): Unit =
+    Staging.buildAll(s)(
+      () => tokenCounts(s, dir),
+      () => curationSurvivors(s, dir),
+      () => termFreqs(s, dir),
+      () => unigramLm(s, dir),
+      () => dsirRatio(s, dir),
+      () => bigramLm(s, dir),
+      () => bpeArtifacts(s, dir),
+      () => bpeDocCounts(s, dir),
+      () => hashedBigramCounts(s, dir),
+      () => gram4Index(s, dir))
 
   /** Drop and release this module's session memos ([[Memo]]). */
   def clearCaches(): Unit = Memo.clear("TextAnalysis")

@@ -33,12 +33,14 @@ object SparkSpec {
     cached
   }
 
-  private def build(): SparkSession = {
-    // local[4, 4]: 4 threads, maxFailures=4 — task retry is live, so
-    // FaultToleranceSpec can exercise E10 re-execution semantics
-    // (ref: mr/master.go:200-214) instead of trusting them.
+  /** The specs' session conf on `master`. The default, local[4, 4]: 4
+    * threads, maxFailures=4 — task retry is live, so FaultToleranceSpec
+    * can exercise E10 re-execution semantics (ref: mr/master.go:200-214)
+    * instead of trusting them.
+    */
+  private[graft] def build(master: String = "local[4, 4]"): SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4, 4]")
+      .master(master)
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

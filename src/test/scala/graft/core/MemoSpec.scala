@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -12,6 +14,8 @@ import graft.SparkSpec
   *    memo of its predecessor — no `clearCaches()` call is needed;
   *  - `Memo.clear()` releases everything the memos hold: no cached RDD
   *    is left in block storage;
+  *  - a miss is single-flight: a concurrent caller of the same key waits
+  *    for the build and gets its value;
   *  - the registry is the only memo mechanism of the query modules.
   */
 class MemoSpec extends SparkSpec {
@@ -106,6 +110,40 @@ class MemoSpec extends SparkSpec {
       assert(storage.isEmpty, s"Memo.clear() left cached RDDs: $storage")
     } finally {
       Memo.clear()
+      delete(dir)
+    }
+  }
+
+  test("two callers of one key build it once and get the same value") {
+    val dir = tempDir("memo_flight")
+    val builds = new AtomicInteger
+    val (started, release) = (new CountDownLatch(1), new CountDownLatch(1))
+    val got = new ConcurrentLinkedQueue[AnyRef]()
+    def ask(): Unit = got.add(Memo(spark, dir, "MemoSpec.flight") {
+      builds.incrementAndGet()
+      started.countDown()
+      release.await()
+      new AnyRef
+    })
+    try {
+      val first = new Thread(() => ask())
+      first.start()
+      started.await()
+      val second = new Thread(() => ask())
+      second.start()
+      // the second caller waits on the key's lock while the build is open
+      val deadline = System.nanoTime() + 10000000000L
+      while (second.getState != Thread.State.BLOCKED && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      val waiting = second.getState
+      release.countDown()
+      first.join(); second.join()
+      assert(waiting == Thread.State.BLOCKED, "the second caller did not wait for the first build")
+      assert(builds.get == 1)
+      assert(got.size == 2 && got.asScala.toSet.size == 1, "the callers got different values")
+    } finally {
+      release.countDown()
+      Memo.clear("MemoSpec")
       delete(dir)
     }
   }

@@ -1,12 +1,15 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.LinkedBlockingQueue
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{array_sort, col}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import graft.SparkSpec
 
@@ -19,7 +22,9 @@ import graft.SparkSpec
   *    corpus,
   *  - staging failures degrade to the in-memory build, never to an error,
   *  - a committed artifact, and a table already opened in the session,
-  *    opens without a Spark job (no schema inference).
+  *    opens without a Spark job (no schema inference);
+  *  - concurrent builds ([[Staging.buildAll]]) all finish before a
+  *    failure is rethrown, and commit what a sequential build commits.
   */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -242,5 +247,73 @@ class StagingSpec extends SparkSpec {
           s"${p.getFileName}: recorded $recorded, inferred $inferred")
       }
     } finally Memo.clear()
+  }
+
+  test("buildAll waits for every build, then rethrows the failure") {
+    val thrown = new CountDownLatch(1)
+    val done = Seq.fill(2)(new AtomicBoolean(false))
+    def slow(i: Int): () => Any = () => {
+      thrown.await()
+      spark.range(0, 1000, 1, 4).selectExpr("sum(id)").collect()
+      done(i).set(true)
+    }
+    val e = intercept[IllegalStateException] {
+      Staging.buildAll(spark)(
+        slow(0),
+        () => { thrown.countDown(); throw new IllegalStateException("planted") },
+        slow(1))
+    }
+    assert(e.getMessage == "planted")
+    assert(done.forall(_.get), "buildAll returned before every build finished")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a build's Spark job outlived the call")
+  }
+
+  // Runs last in this suite: the sequential build needs a context whose
+  // default parallelism is 1 (every buildAll then runs its builds in
+  // line), so it stops the shared context; the next suite rebuilds it.
+  test("a cold corpus staged concurrently commits what a sequential build commits") {
+    assume(Staging.enabled, "staging disabled in this JVM")
+    val src = new java.io.File("perfbench/data/sf0.001")
+    assume(src.isDirectory, s"$src not found")
+    val base = Files.createTempDirectory("staging_concurrent")
+    val (concurrent, sequential) = (base.resolve("concurrent"), base.resolve("sequential"))
+    Seq(concurrent, sequential).foreach(d =>
+      org.apache.commons.io.FileUtils.copyDirectory(src, d.toFile))
+    /** Each committed artifact of `dir`'s generation, as its sorted JSON
+      * rows. Array columns are compared sorted: a `collect_list` (e.g.
+      * kept_sets' shingle sets) lists in shuffle-fetch order, which
+      * follows the partitioning, and the two builds partition differently.
+      */
+    def committed(s: SparkSession, dir: Path): Map[String, Seq[String]] =
+      Staging.withStream(Files.list(Staging.generationPath(dir.toString)))(
+        _.filter(p => Files.exists(p.resolve("_SUCCESS"))).toList)
+        .map { p =>
+          val df = Staging.openStaged(s, p)
+          val cols = df.schema.map(f => f.dataType match {
+            case _: ArrayType => array_sort(col(f.name)).as(f.name)
+            case _ => col(f.name)
+          })
+          p.getFileName.toString -> df.select(cols: _*).toJSON.collect().sorted.toSeq
+        }.toMap
+    try {
+      Memo.clear()
+      graft.StageIndexes.stageAll(spark, concurrent.toString)
+      Memo.clear()
+      spark.stop()
+      val one = graft.SparkSpec.build("local[1]")
+      try {
+        assert(one.sparkContext.defaultParallelism == 1)
+        graft.StageIndexes.stageAll(one, sequential.toString)
+        val (c, q) = (committed(one, concurrent), committed(one, sequential))
+        assert(c.size >= 40, s"only ${c.size} artifacts committed")
+        assert(c.keySet == q.keySet)
+        val differ = c.keys.filter(n => c(n) != q(n)).toSeq.sorted
+        assert(differ.isEmpty, s"rows differ in ${differ.mkString(", ")}")
+      } finally {
+        Memo.clear()
+        one.stop()
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
   }
 }
