@@ -25,13 +25,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadavg()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Tables.requiredConfs
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.session(s"local[$cpus]", cpus.toInt)
     // warm up codegen/JIT + file listing so the first timed query is not
     // charged for one-off session costs
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -130,15 +124,9 @@ object Bench {
         val heaviest = results.toSeq.filter(_._2 >= 0).sortBy(-_._2)
           .take(10).map(_._1)
         spark.stop()
-        val cs = graft.core.Tables.requiredConfs
-          .foldLeft(SparkSession.builder()
-            .master("local-cluster[2,8,4096]")
-            .config("spark.sql.shuffle.partitions", "16")
-            .config("spark.executor.memory", "4g")
-            .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-            .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-          .getOrCreate()
-        cs.sparkContext.setLogLevel("WARN")
+        val cs = graft.core.Tables.session("local-cluster[2,8,4096]", 16,
+          "spark.executor.memory" -> "4g",
+          "spark.executor.extraClassPath" -> sys.props("java.class.path"))
         cs.range(1000000).selectExpr("sum(id)").collect() // executors up + JIT
         heaviest.map { name =>
           name -> Seq.fill(reps) {

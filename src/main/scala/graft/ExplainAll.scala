@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-audit tool: dumps the formatted physical plan of every query in
@@ -10,11 +9,7 @@ import org.apache.spark.sql.execution.FormattedMode
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.core.Tables.requiredConfs
-      .foldLeft(SparkSession.builder().master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = graft.core.Tables.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       println(s"===== $name =====")

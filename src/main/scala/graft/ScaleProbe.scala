@@ -29,12 +29,7 @@ object ScaleProbe {
     // corpora — a durable-staging disk hit would silently turn a build
     // measurement into a parquet read
     graft.core.Staging.disableInProcess()
-    val spark = graft.core.Tables.requiredConfs
-      .foldLeft(SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.session("local[32]", 32)
     import spark.implicits._
 
     if (args.headOption.contains("sweep")) { pqSweep(spark); spark.stop(); return }

@@ -33,13 +33,7 @@ object StageIndexes {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.requiredConfs
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.session(s"local[$cpus]", cpus.toInt)
     val t0 = System.nanoTime()
     stageAll(spark, dir)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -59,7 +59,7 @@ object Staging {
     * constants, band shape, quantizer structure, PQ dims, …) — the cheap
     * global alternative to per-artifact schema hashes.
     */
-  val FormatVersion = "r11-2" // r11-2: artifacts carry `_schema.json`, and opens read only that schema
+  val FormatVersion = "r11-3" // r11-3: no artifact is partitioned; kept_sets lists its shingles sorted
 
   @volatile private var disabledInProcess = false
 
@@ -187,8 +187,7 @@ object Staging {
     * [[FingerprintTables]]).
     */
   def readElseBuild(s: SparkSession, dir: String, name: String,
-      deps: Seq[String], partitionCols: Seq[String] = Nil)(
-      build: => DataFrame): DataFrame = {
+      deps: Seq[String])(build: => DataFrame): DataFrame = {
     if (!enabled) return build
     val dest =
       try generationPath(dir).resolve(name)
@@ -209,7 +208,7 @@ object Staging {
       try Files.writeString(gen.resolve(".corpus"), corpus)
       catch { case NonFatal(_) => () }
       val tmp = gen.resolve(s".${name}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
+      df.write.mode("overwrite").parquet(tmp.toString)
       Files.writeString(tmp.resolve(SchemaFile), df.schema.json)
       try Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
       catch {
@@ -225,29 +224,12 @@ object Staging {
 
   /** A scan of the committed artifact at `dest` under the schema its
     * build recorded — the one way an artifact is opened. Spark makes the
-    * data columns nullable, as inference would; partition columns take
-    * the recorded type instead of the one inferred from directory names.
+    * columns nullable, as inference would.
     */
   private[core] def openStaged(s: SparkSession, dest: Path): DataFrame =
     s.read
       .schema(DataType.fromJson(Files.readString(dest.resolve(SchemaFile))).asInstanceOf[StructType])
       .parquet(dest.toString)
-
-  /** A FRESH parquet scan of an already-staged artifact, or None when
-    * the store holds no committed copy (disabled layer, cold store, or
-    * a failed stage). Callers that normally consume a session-persisted
-    * copy of the artifact use this to re-enter the parquet scan when a
-    * literal filter can prune it (partition directories / row groups) —
-    * pruning never reaches an InMemoryRelation.
-    */
-  def stagedScan(s: SparkSession, dir: String, name: String): Option[DataFrame] =
-    if (!enabled) None
-    else
-      try {
-        val dest = generationPath(dir).resolve(name)
-        if (Files.exists(dest.resolve("_SUCCESS"))) Some(openStaged(s, dest))
-        else None
-      } catch { case NonFatal(_) => None }
 
   /** Best-effort removal of every generation other than `gen` whose
     * `.corpus` marker names `corpus` (superseded by a regenerated

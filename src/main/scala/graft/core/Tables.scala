@@ -56,10 +56,9 @@ object Tables {
     }
   }
 
-  /** Session-build confs the table loaders rely on. Apply with
-    * `requiredConfs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }`
-    * — mutating the session conf inside a getter was a side effect that
-    * surprised callers, so it lives here instead.
+  /** Session-build confs the table loaders rely on; [[session]] applies
+    * them — mutating the session conf inside a getter was a side effect
+    * that surprised callers, so it lives here instead.
     *
     * UTC is load-bearing, not cosmetic: [[normalizeEventTs]]'s NTZ branch
     * casts to session-zoned TimestampType, which is value-preserving only
@@ -76,4 +75,18 @@ object Tables {
     // degrades In to a min/max range, which prunes nothing when probe
     // words span the alphabet
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "4096")
+
+  /** The session every main and spec builds: `master` with
+    * [[requiredConfs]], `shufflePartitions` shuffle partitions, the UI
+    * off, then `extra` confs; logging at WARN. */
+  def session(master: String, shufflePartitions: Int,
+      extra: (String, String)*): SparkSession = {
+    val s = (requiredConfs.toSeq ++ extra)
+      .foldLeft(SparkSession.builder().master(master)
+        .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -467,7 +467,7 @@ object Dedup {
       Staging.readElseBuild(s, dir, "kept_sets", Seq("documents")) {
         val (kept, _) = shingleIndex(s, dir)
         kept.groupBy($"doc_id")
-          .agg(collect_list($"sh").as("shs"), count(lit(1)).as("n_sh"))
+          .agg(sort_array(collect_list($"sh")).as("shs"), count(lit(1)).as("n_sh"))
       }.persist()
     }
 
@@ -520,14 +520,15 @@ object Dedup {
     * a literal that large was measured at ~24 s for a 1k-doc batch on
     * the 10× replica (the anti-join form is ~1 s). Shingle-set order is
     * immaterial downstream (minhash takes per-permutation minima), so
-    * the collect_list regroup is value-equivalent to the array route.
+    * the regroup is value-equivalent to the array route; it is sorted
+    * like [[keptSets]], so merged and rebuilt sets list alike.
     */
   private def batchKeptShingles(s: SparkSession, dir: String, batch: DataFrame): DataFrame = {
     import graft.queries.QueryFns.wsTokens
     batch.select(col("doc_id"), wsTokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(shingles(col("toks"))).as("sh"))
       .join(broadcast(hotShingles(s, dir)), Seq("sh"), "left_anti")
-      .groupBy(col("doc_id")).agg(collect_list(col("sh")).as("shs"))
+      .groupBy(col("doc_id")).agg(sort_array(collect_list(col("sh"))).as("shs"))
   }
 
   /** The REBUILD TRIGGER for the merge above: shingles the batch pushes

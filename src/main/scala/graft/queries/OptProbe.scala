@@ -19,13 +19,7 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.requiredConfs
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]", cpus.toInt)
     implicit val s: SparkSession = spark
     import spark.implicits._
 
@@ -189,40 +183,11 @@ object OptProbe {
       }
     }
 
-    // ================= wb-pruned phrase route (r18) =================
-    if (on("wb")) {
-      // the ungated pruned shape at this corpus size: with
-      // OPT_PROBE_PLANS=1 the dump shows the probe words' bucket ids as
-      // PartitionFilters and the word In as PushedFilters on the
-      // wb-partitioned staged artifact — the shape sessionIndexRoute
-      // selects past PhraseWbMinBuckets buckets
-      val phrases = Positional.queryPhrases(spark, dir)
-      val cf = Some(Positional.positionalCf(spark, dir))
-      Positional.wbStagedScan(spark, dir) match {
-        case Some((scan, nb)) =>
-          time("wb.starts_pruned") {
-            Positional.phraseStartsOn(spark, scan, phrases, Some(nb), cf = cf)
-          }
-          time("wb.starts_memo") {
-            Positional.phraseStartsOn(spark,
-              Positional.positionalIndex(spark, dir), phrases, cf = cf)
-          }
-        case None => println("""{"part": "wb", "skipped": "no staged artifact"}""")
-      }
-    }
-
     // ================= ann_pq_topk =================
     if (on("pq")) {
       time("pq.full_topk") {
         Similarity.pqTopkFor(spark, dir, col("vec_id") < 50,
           Similarity.pqServingDefaults._1, Similarity.pqServingDefaults._2, 5)
-      }
-      // the r18 pruned serving-cell route in isolation: with
-      // OPT_PROBE_PLANS=1 the dump shows the probed-cell literal In
-      // reaching the cell-partitioned artifact as PartitionFilters —
-      // the shape pqTopkFor routes through past PqPruneMinCells cells
-      time("pq.pruned_cells") {
-        Similarity.pqServingCells(spark, dir, Seq(0L, 1L, 2L))
       }
     }
 

@@ -110,95 +110,13 @@ object Positional {
     * whitespace tokens (the lexical family's tokenizer). pos is
     * 0-based here and 1-based in the oracle — positions never leave a
     * query (only counts and differences do), so the bases never meet.
-    *
-    * r18: the artifact is COMMITTED WORD-BUCKETED (`wb =
-    * xxhash64(word) mod NB` partition directories, word-sorted within
-    * — exactly the layout [[writePositionalGeneration]] already
-    * commits for the serving generations), so a probed-word
-    * restriction can prune the scan at planning instead of streaming
-    * the postings past a semi-join ([[sessionWbRoute]]). This memo
-    * normalizes the partitioned read-back to the historical build
-    * shape (wb dropped, column order restored) so every existing
-    * consumer sees one shape; the pruned route re-enters the artifact
-    * as a fresh scan ([[wbStagedScan]]) because no partition filter
-    * reaches an InMemoryRelation.
     */
   private[graft] def positionalIndex(s: SparkSession, dir: String): DataFrame =
     Memo(s, dir, "Positional.positional_index") {
-      var built: DataFrame = null
-      val scan = Staging.readElseBuild(s, dir, "positional_index_wb",
-        Seq("documents"), partitionCols = Seq("wb")) {
-        val rows = positionalRowsOf(s, Tables(s, dir).documents
-          .repartition(s.sparkContext.defaultParallelism)).persist()
-        built = rows
-        // the modulus is size-derived (bucketsFor over the exact row
-        // count), so a reader recovers it by re-counting the artifact —
-        // no sidecar needed inside the staging store ([[positionalNb]])
-        graft.core.WbLayout.bucketed(
-          rows, "word", graft.core.WbLayout.bucketsFor(rows.count()),
-          Seq("doc_id", "pos"))
-      }
-      val out = scan.select(col("doc_id"), col("pos"), col("word")).persist()
-      // the build-time postings frame was persisted only to keep the
-      // count + bucketed write from tokenizing the corpus twice
-      if (built != null) built.unpersist()
-      out
-    }
-
-  /** The committed bucket modulus of [[positionalIndex]]'s artifact —
-    * recomputed as the writer computed it (size-derived, deterministic
-    * for a given corpus) and session-memoized: one count job on the
-    * persisted index per session. */
-  private[queries] def positionalNb(s: SparkSession, dir: String): Int =
-    Memo(s, dir, "Positional.positional_nb")(
-      graft.core.WbLayout.bucketsFor(positionalIndex(s, dir).count()))
-
-  /** Bucket-count gate for the session-corpus pruned route: below this
-    * the probed words hit most buckets anyway (expected hit fraction
-    * 1 − e^(−|probe terms|/NB); the gate batch probes ~150 words, so
-    * NB = 256 is the first power of two where under half the
-    * directories survive) and the route pays fresh parquet scans
-    * against a frame the session already holds in memory — measured a
-    * flat-to-slight LOSS at the gate SFs (NB = 16 at sf0.1), exactly
-    * the [[Similarity]] PqPruneMinCells shape. Past it the probe is a
-    * planning-time-pruned lookup whose cost tracks hit-buckets/NB, not
-    * corpus size (the committed-generation form measured flat across
-    * corpus decades — SCALING.md r16). Env-overridable
-    * (`SPARK_GRAFT_WB_MIN_BUCKETS`) so a probe run can force the route
-    * at any corpus size — the default is the measured local gate. */
-  private[queries] val PhraseWbMinBuckets: Int =
-    sys.env.get("SPARK_GRAFT_WB_MIN_BUCKETS").flatMap(_.toIntOption)
-      .getOrElse(256)
-
-  /** The wb-partitioned staged artifact as a FRESH scan (wb column
-    * kept) plus its modulus — None when the store holds no committed
-    * copy (disabled layer / cold store), in which case callers keep
-    * the memoized-index semi-join route. Ungated: [[sessionWbRoute]]
-    * applies the bucket-count gate; specs and the OptProbe plan dump
-    * enter here to exercise the pruned shape at any corpus size. */
-  private[queries] def wbStagedScan(
-      s: SparkSession, dir: String): Option[(DataFrame, Int)] =
-    Staging.stagedScan(s, dir, "positional_index_wb")
-      .map(sc => (sc.select(col("word"), col("doc_id"), col("pos"),
-        col("wb").cast("int").as("wb")), positionalNb(s, dir)))
-
-  /** The gated session-corpus pruned route: Some(artifact scan, NB)
-    * exactly when the corpus has enough buckets for a gate-batch-sized
-    * probe to prune (see [[PhraseWbMinBuckets]]). */
-  private[queries] def sessionWbRoute(
-      s: SparkSession, dir: String): Option[(DataFrame, Int)] =
-    if (positionalNb(s, dir) >= PhraseWbMinBuckets) wbStagedScan(s, dir)
-    else None
-
-  /** The (index, prune modulus) pair every session-corpus phrase/
-    * proximity query consumes: the gated wb-pruned artifact scan when
-    * the corpus has enough buckets to pay, else the memoized index
-    * with no prune — one routing decision, shared by all callers. */
-  private def sessionIndexRoute(
-      s: SparkSession, dir: String): (DataFrame, Option[Int]) =
-    sessionWbRoute(s, dir) match {
-      case Some((scan, nb)) => (scan, Some(nb))
-      case None => (positionalIndex(s, dir), None)
+      Staging.readElseBuild(s, dir, "positional_index", Seq("documents")) {
+        positionalRowsOf(s, Tables(s, dir).documents
+          .repartition(s.sparkContext.defaultParallelism))
+      }.persist()
     }
 
   /** The DURABLE capped lists — every word's postings cut to the first
@@ -545,11 +463,9 @@ object Positional {
     * naive semantics (the oracle keeps the straightforward form).
     */
   private[graft] def phraseOcc(s: SparkSession, dir: String,
-      extra: org.apache.spark.sql.Column = GateAll): DataFrame = {
-    val (idx, nb) = sessionIndexRoute(s, dir)
-    phraseOccOn(s, idx, queryPhrases(s, dir, extra), nb,
+      extra: org.apache.spark.sql.Column = GateAll): DataFrame =
+    phraseOccOn(s, positionalIndex(s, dir), queryPhrases(s, dir, extra),
       cf = Some(positionalCf(s, dir)))
-  }
 
   private def phraseOccOn(s: SparkSession, index: DataFrame,
       phrases: DataFrame, wbN: Option[Int] = None,
@@ -712,9 +628,8 @@ object Positional {
   private[graft] def phraseOccCapped(s: SparkSession, dir: String,
       extra: org.apache.spark.sql.Column = GateAll): DataFrame = {
     import s.implicits._
-    val (idx, nb) = sessionIndexRoute(s, dir)
-    phraseAnchorParts(s, idx, queryPhrases(s, dir, extra),
-      Some(cappedIndex(s, dir)), nb, cf = Some(positionalCf(s, dir)))._1
+    phraseAnchorParts(s, positionalIndex(s, dir), queryPhrases(s, dir, extra),
+      Some(cappedIndex(s, dir)), cf = Some(positionalCf(s, dir)))._1
       .groupBy($"qid", $"doc_id")
       .agg(count(lit(1)).as("n_occ"))
   }
@@ -769,9 +684,8 @@ object Positional {
   private[graft] def phraseCapMeterFor(s: SparkSession, dir: String,
       extra: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
-    val (idx, nb) = sessionIndexRoute(s, dir)
-    phraseAnchorParts(s, idx, queryPhrases(s, dir, extra),
-      Some(cappedIndex(s, dir)), nb, cf = Some(positionalCf(s, dir)))._2
+    phraseAnchorParts(s, positionalIndex(s, dir), queryPhrases(s, dir, extra),
+      Some(cappedIndex(s, dir)), cf = Some(positionalCf(s, dir)))._2
       .select($"qid", $"adf".as("anchor_df"),
         when($"adf" <= PhraseCapP, 1L).otherwise(0L).as("exact"))
   }
@@ -792,12 +706,10 @@ object Positional {
     * the session corpus index — the batch core of
     * [[graft.streaming.PositionalStream.serve]]. */
   private[graft] def phraseServeBatch(s: SparkSession, dir: String,
-      queryDocs: DataFrame, k: Int = 10): DataFrame = {
-    val (idx, nb) = sessionIndexRoute(s, dir)
+      queryDocs: DataFrame, k: Int = 10): DataFrame =
     phraseTopk(s,
-      phraseOccOn(s, idx, phrasesOf(s, queryDocs), nb,
+      phraseOccOn(s, positionalIndex(s, dir), phrasesOf(s, queryDocs),
         cf = Some(positionalCf(s, dir))), k)
-  }
 
   /** Word-hash bucket count for a generation's postings layout — the
     * shared committed-layout sizing ([[graft.core.WbLayout.bucketsFor]],
@@ -1052,10 +964,8 @@ object Positional {
     // positions are relative to the match start, so the engines' 0- vs
     // 1-based posting offsets never meet the output.
     "tx_snippet" -> { (s, dir) =>
-      val (idx, nb) = sessionIndexRoute(s, dir)
-      snippetOn(s, idx, queryPhrases(s, dir),
-        nb, cf = Some(positionalCf(s, dir)),
-        ctxIndex = if (nb.isDefined) Some(positionalIndex(s, dir)) else None)
+      snippetOn(s, positionalIndex(s, dir), queryPhrases(s, dir),
+        cf = Some(positionalCf(s, dir)))
     },
 
     // The TRUNCATED phrase tier: candidates from each anchor's first
@@ -1065,10 +975,9 @@ object Positional {
     // equal tx_phrase_search's — PositionalSpec pins it).
     "tx_phrase_capped" -> { (s, dir) =>
       import s.implicits._
-      val (idx, nb) = sessionIndexRoute(s, dir)
       val (starts, anchors) = phraseAnchorParts(
-        s, idx, queryPhrases(s, dir),
-        Some(cappedIndex(s, dir)), nb, cf = Some(positionalCf(s, dir)))
+        s, positionalIndex(s, dir), queryPhrases(s, dir),
+        Some(cappedIndex(s, dir)), cf = Some(positionalCf(s, dir)))
       val occ = starts.groupBy($"qid", $"doc_id").agg(count(lit(1)).as("n_occ"))
       val exactf = anchors.select($"qid",
         when($"adf" <= PhraseCapP, 1L).otherwise(0L).as("exact"))
@@ -1094,10 +1003,9 @@ object Positional {
     // that prices the truncation instead of hoping about it.
     "tx_phrase_cap_meter" -> { (s, dir) =>
       import s.implicits._
-      val (idx, nb) = sessionIndexRoute(s, dir)
       val (starts, anchors) = phraseAnchorParts(
-        s, idx, queryPhrases(s, dir),
-        Some(cappedIndex(s, dir)), nb, cf = Some(positionalCf(s, dir)))
+        s, positionalIndex(s, dir), queryPhrases(s, dir),
+        Some(cappedIndex(s, dir)), cf = Some(positionalCf(s, dir)))
       val st = starts.groupBy($"qid", $"doc_id").agg(count(lit(1)).as("n_occ"))
         .groupBy($"qid")
         .agg(count(lit(1)).as("n_docs"), sum($"n_occ").as("n_occs"))
@@ -1115,8 +1023,7 @@ object Positional {
     * tx_snippet and the serving tier ([[snippetServeGenBatch]]). */
   private[queries] def snippetOn(s: SparkSession, index: DataFrame,
       phrases: DataFrame, wbN: Option[Int] = None,
-      cf: Option[DataFrame] = None,
-      ctxIndex: Option[DataFrame] = None): DataFrame = {
+      cf: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
     // ONE aggregation carries both the occurrence count and the
     // first-match anchor — the starts probe pass runs exactly once
@@ -1130,10 +1037,8 @@ object Positional {
       .filter($"rk" === 1).select($"qid", $"doc_id", $"n_occ", $"s0")
     // best is broadcast ONCE with n_occ carried through the snippet
     // aggregation key — a second reference to `best` here would
-    // re-run the whole starts chain (measured: 3.5 s vs 2.2 s).
-    // The window reconstruction needs EVERY word of the best docs, so a
-    // word-pruned route passes the unpruned index separately (ctxIndex).
-    ctxIndex.getOrElse(index)
+    // re-run the whole starts chain (measured: 3.5 s vs 2.2 s)
+    index
       .join(broadcast(best), Seq("doc_id"))
       .filter($"pos" >= $"s0" - 2 && $"pos" <= $"s0" + 4)
       .groupBy($"qid", $"doc_id", $"n_occ")
@@ -1157,8 +1062,7 @@ object Positional {
   private[graft] def proximityFor(s: SparkSession, dir: String,
       extra: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
-    val (idx, nb) = sessionIndexRoute(s, dir)
-    proximityOn(s, idx, probeToks(s, dir, extra), nb)
+    proximityOn(s, positionalIndex(s, dir), probeToks(s, dir, extra))
   }
 
   /** Serve one micro-batch of (doc_id, text) proximity queries against
@@ -1167,9 +1071,8 @@ object Positional {
   private[graft] def proximityServeBatch(s: SparkSession, dir: String,
       queryDocs: DataFrame): DataFrame = {
     import s.implicits._
-    val (idx, nb) = sessionIndexRoute(s, dir)
-    proximityOn(s, idx, queryDocs
-      .select($"doc_id".as("qid"), wsTokens(lower($"text")).as("toks")), nb)
+    proximityOn(s, positionalIndex(s, dir), queryDocs
+      .select($"doc_id".as("qid"), wsTokens(lower($"text")).as("toks")))
   }
 
   /** The proximity serve core against an EXPLICIT generation. */

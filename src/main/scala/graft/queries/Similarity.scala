@@ -1723,20 +1723,6 @@ object Similarity {
     */
   private val PqParams = s"m${PqM}b${PqBits}r${PqMagBits}l$PqLloydSteps"
 
-  /** Minimum cell count before the batch serving pass routes its
-    * candidate scan through the cell-partitioned artifact with literal
-    * probed-cell partition filters ([[pqServingCells]]). Below it the
-    * memoized in-memory index wins: at the gate SFs (nlist = 10, every
-    * cell probed by a 50-query batch) the r18 paired probe measured the
-    * fresh pruned scan 0.4–0.5 s SLOWER per query (two parquet scans +
-    * a cell-id collect vs an InMemoryRelation that prunes nothing
-    * anyway); past ~64 cells a batch's nprobe union is a shrinking
-    * fraction of the directories and the pruned scan is the §6 serving
-    * shape (nlist ∝ √n — a 100 TB corpus has thousands of cells, of
-    * which one batch probes a few hundred).
-    */
-  private val PqPruneMinCells = 64
-
   /** Per-vector residual against its trained-cell centroid — the vector
     * PQ encodes (the classic IVF-PQ decomposition: store the cell id
     * plus M small codes instead of d floats).
@@ -1934,22 +1920,7 @@ object Similarity {
     val tdm = td.groupBy($"probe")
       .agg(map_from_entries(collect_list(
         struct(($"m" * K + $"code").as("k"), $"sd".as("v")))).as("adc"))
-    // r18: when the quantizer has enough cells for a batch to prune
-    // (see [[PqPruneMinCells]]), the probed cells — one metadata-sized
-    // driver collect of probes × nprobe ids — become literal partition
-    // filters on the cell-partitioned staged index, so the candidate
-    // scan reads ONLY the probed cells' directories instead of
-    // streaming every vector past the broadcast probe join (§6: at
-    // scale nprobe cells are a vanishing fraction of the index; the
-    // join alone never prunes the scan). Both consumers below draw
-    // from probed cells only, so the restriction is value-identical
-    // (SimilaritySpec pins pruned == filtered-memo row-for-row).
-    val psi =
-      if (nlistFor(corpusSize(s, dir)) >= PqPruneMinCells) {
-        val cellIds = pcells.select($"pcell").distinct()
-          .as[Long].collect().toSeq.sorted
-        pqServingCells(s, dir, cellIds)
-      } else pqServingIndex(s, dir)
+    val psi = pqServingIndex(s, dir)
     val probesC = pcells.join(probes0.select($"probe", $"pn"), "probe")
     val approx = psi
       .join(broadcast(probesC), $"cell" === $"pcell" && $"vec_id" =!= $"probe")
@@ -2044,9 +2015,9 @@ object Similarity {
     * rescore of the shortlist. All pieces are the SAME staged batch
     * artifacts the batch `ann_pq_topk` serves from, joined on vec_id —
     * the index is built once per corpus generation; the query stream
-    * never touches raw corpus text. At 100 TB this table is written
-    * partitioned by cell so the per-batch stream-static join prunes to
-    * the probed cells.
+    * never touches raw corpus text. At 100 TB [[writeServingIndex]]
+    * writes this table partitioned by cell, so the streaming twin's
+    * per-batch scan prunes to the probed cells.
     */
   def pqServingIndex(s: SparkSession, dir: String): DataFrame =
     Memo(s, dir, "Similarity.pq_srv") {
@@ -2056,14 +2027,7 @@ object Similarity {
       // three vec_id joins PER QUERY; the assembled index is the
       // artifact the index-build job writes once, and both the batch
       // serving pass and the streaming twin read it as ONE table.
-      // r18: written CELL-PARTITIONED (hive directories, the layout
-      // [[writeServingIndex]] already commits for the streaming twin) so
-      // a batch query's probed cells prune the scan at planning — see
-      // [[pqServingCells]]. The select normalizes the partitioned
-      // read-back (the partition column comes back last) to the build's
-      // exact column order, so every consumer sees one shape.
-      Staging.readElseBuild(s, dir, s"pq_serving_index_$PqParams",
-          Seq("embeddings"), partitionCols = Seq("cell")) {
+      Staging.readElseBuild(s, dir, s"pq_serving_index_$PqParams", Seq("embeddings")) {
         vecs(s, dir).select($"vec_id", $"embedding", $"norm2")
           .join(assignments(s, dir), "vec_id")
           .join(
@@ -2073,34 +2037,8 @@ object Similarity {
             "vec_id")
           .select($"vec_id", $"alabel".cast("long").as("cell"), $"norm2",
             $"codes", $"embedding")
-      }.select($"vec_id", $"cell".cast("long").as("cell"), $"norm2",
-          $"codes", $"embedding")
-        .persist()
+      }.persist()
     }
-
-  /** The serving index restricted to `cells`, as a FRESH scan of the
-    * staged cell-partitioned artifact (r18): the literal In over the
-    * partition column prunes non-probed cell directories at PLANNING —
-    * the batch analogue of the streaming twin's
-    * [[graft.streaming.AnnStream.pqServePruned]] — where the memoized
-    * [[pqServingIndex]] frame is an InMemoryRelation no partition
-    * filter can reach. Falls back to filtering the memoized frame when
-    * the store holds no artifact (staging disabled / stage failure);
-    * rows are identical either way — the filter is exactly the probed
-    * cell set every consumer joins on.
-    */
-  private[queries] def pqServingCells(s: SparkSession, dir: String,
-      cells: Seq[Long]): DataFrame = {
-    import s.implicits._
-    val full = pqServingIndex(s, dir) // also forces the artifact staged
-    Staging.stagedScan(s, dir, s"pq_serving_index_$PqParams") match {
-      case Some(scan) =>
-        scan.filter($"cell".isin(cells: _*))
-          .select($"vec_id", $"cell".cast("long").as("cell"), $"norm2",
-            $"codes", $"embedding")
-      case None => full.filter($"cell".isin(cells: _*))
-    }
-  }
 
   /** The (nprobe, shortlist) the batch `ann_pq_topk` serves with —
     * exposed so the streaming twin and its parity spec score under the

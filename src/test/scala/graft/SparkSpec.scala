@@ -38,17 +38,6 @@ object SparkSpec {
     * can exercise E10 re-execution semantics (ref: mr/master.go:200-214)
     * instead of trusting them.
     */
-  private[graft] def build(master: String = "local[4, 4]"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Tables.NanosAsLong, "true")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private[graft] def build(master: String = "local[4, 4]"): SparkSession =
+    graft.core.Tables.session(master, 4, "spark.app.name" -> "graft-test")
 }

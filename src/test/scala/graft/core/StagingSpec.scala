@@ -8,8 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{array_sort, col}
-import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -227,14 +226,9 @@ class StagingSpec extends SparkSpec {
   }
 
   test("every artifact stageAll commits opens with its inferred schema") {
-    // the partition column `cell` is the one intended difference: the
-    // recorded schema keeps the build's long where inference from
-    // directory names reads int
     assume(Staging.enabled, "staging disabled in this JVM")
     val dir = "perfbench/data/sf0.001"
     assume(Files.isDirectory(Paths.get(dir)), s"$dir not found")
-    def cellAsLong(t: StructType) =
-      StructType(t.map(f => if (f.name == "cell") f.copy(dataType = LongType) else f))
     try {
       graft.StageIndexes.stageAll(spark, dir)
       val artifacts: Seq[Path] = Staging.withStream(Files.list(Staging.generationPath(dir)))(
@@ -243,7 +237,7 @@ class StagingSpec extends SparkSpec {
       artifacts.foreach { p =>
         val recorded = Staging.openStaged(spark, p).schema
         val inferred = spark.read.parquet(p.toString).schema
-        assert(cellAsLong(recorded) == cellAsLong(inferred),
+        assert(recorded == inferred,
           s"${p.getFileName}: recorded $recorded, inferred $inferred")
       }
     } finally Memo.clear()
@@ -281,21 +275,13 @@ class StagingSpec extends SparkSpec {
     Seq(concurrent, sequential).foreach(d =>
       org.apache.commons.io.FileUtils.copyDirectory(src, d.toFile))
     /** Each committed artifact of `dir`'s generation, as its sorted JSON
-      * rows. Array columns are compared sorted: a `collect_list` (e.g.
-      * kept_sets' shingle sets) lists in shuffle-fetch order, which
-      * follows the partitioning, and the two builds partition differently.
-      */
+      * rows, array columns as stored. */
     def committed(s: SparkSession, dir: Path): Map[String, Seq[String]] =
       Staging.withStream(Files.list(Staging.generationPath(dir.toString)))(
         _.filter(p => Files.exists(p.resolve("_SUCCESS"))).toList)
-        .map { p =>
-          val df = Staging.openStaged(s, p)
-          val cols = df.schema.map(f => f.dataType match {
-            case _: ArrayType => array_sort(col(f.name)).as(f.name)
-            case _ => col(f.name)
-          })
-          p.getFileName.toString -> df.select(cols: _*).toJSON.collect().sorted.toSeq
-        }.toMap
+        .map(p => p.getFileName.toString ->
+          Staging.openStaged(s, p).toJSON.collect().sorted.toSeq)
+        .toMap
     try {
       Memo.clear()
       graft.StageIndexes.stageAll(spark, concurrent.toString)

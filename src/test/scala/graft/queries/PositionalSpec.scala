@@ -318,14 +318,13 @@ class PositionalSpec extends SparkSpec {
     assert(first == second)
   }
 
-  test("wb-pruned session route equals the memoized index route (r18)") {
-    // the session-corpus phrase/proximity queries route their probed-
-    // word restriction through the wb-partitioned staged artifact
-    // (literal bucket + word In filters on a fresh scan) once the
-    // corpus clears PhraseWbMinBuckets; this pins the two routes
-    // row-for-row equal at ANY bucket count, so the gate corpora —
-    // which exercise only the memoized route — still prove the pruned
-    // one (the PqSpec serving-cell pattern).
+  test("word-bucketed generation routes equal the memoized index route") {
+    // a committed generation serves its probed words through bucket +
+    // word In filters on the wb-partitioned postings (wbN = Some(nb));
+    // this pins that pruned route row-for-row equal to the unpruned
+    // semi-join on the session's memoized index, for every core that
+    // takes a modulus — serveLatestProximity has no parity spec of its
+    // own, so this is the one check of proximityOn's pruned branch
     import org.apache.spark.sql.DataFrame
     import spark.implicits._
     val docs = Seq(
@@ -335,39 +334,41 @@ class PositionalSpec extends SparkSpec {
       (50L, "p p q r", "s0"),
       (3L, "p x q p", "s1"))
     val dir = freshDir(docs)
-    Positional.stageIndexes(spark, dir)
-    val route = Positional.wbStagedScan(spark, dir)
-    assume(route.isDefined, "staging layer disabled — no wb artifact to probe")
-    val (scan, nb) = route.get
-    assert(scan.columns.contains("wb") && nb >= 16)
-    val memoIdx = Positional.positionalIndex(spark, dir)
-    val phrases = Positional.queryPhrases(spark, dir)
-    val cf = Some(Positional.positionalCf(spark, dir))
-    def same(pruned: DataFrame, memo: DataFrame, what: String): Unit =
-      assert(pruned.exceptAll(memo).isEmpty && memo.exceptAll(pruned).isEmpty,
-        s"$what: pruned route must equal the memoized route")
-    same(
-      Positional.phraseStartsOn(spark, scan, phrases, Some(nb), cf = cf),
-      Positional.phraseStartsOn(spark, memoIdx, phrases, cf = cf),
-      "exact phrase starts")
-    val capped = Some(Positional.cappedIndex(spark, dir))
-    same(
-      Positional.phraseAnchorParts(spark, scan, phrases, capped, Some(nb),
-        cf = cf)._1,
-      Positional.phraseAnchorParts(spark, memoIdx, phrases, capped,
-        cf = cf)._1,
-      "capped phrase starts")
-    same(
-      Positional.snippetOn(spark, scan, phrases, Some(nb), cf = cf,
-        ctxIndex = Some(memoIdx)),
-      Positional.snippetOn(spark, memoIdx, phrases, cf = cf),
-      "snippets")
-    val pt = Seq(
-      (0L, Seq("a", "b", "a", "x", "y")),
-      (50L, Seq("p", "p", "q", "r"))).toDF("qid", "toks")
-    same(
-      Positional.proximityOn(spark, scan, pt, Some(nb)),
-      Positional.proximityOn(spark, memoIdx, pt),
-      "proximity pairs")
+    val root = java.nio.file.Files.createTempDirectory("poswbroot").toString
+    try {
+      Positional.writePositionalGeneration(spark, dir, root)
+      val g = Positional.loadPositionalGeneration(spark, root)
+      assert(g.postings.columns.contains("wb") && g.wbN.exists(_ >= 16))
+      val memoIdx = Positional.positionalIndex(spark, dir)
+      val phrases = Positional.queryPhrases(spark, dir)
+      val cf = Some(Positional.positionalCf(spark, dir))
+      def same(pruned: DataFrame, memo: DataFrame, what: String): Unit =
+        assert(pruned.exceptAll(memo).isEmpty && memo.exceptAll(pruned).isEmpty,
+          s"$what: pruned route must equal the memoized route")
+      same(
+        Positional.phraseStartsOn(spark, g.postings, phrases, g.wbN, cf = cf),
+        Positional.phraseStartsOn(spark, memoIdx, phrases, cf = cf),
+        "exact phrase starts")
+      val capped = Some(Positional.cappedIndex(spark, dir))
+      same(
+        Positional.phraseAnchorParts(spark, g.postings, phrases, capped, g.wbN,
+          cf = cf)._1,
+        Positional.phraseAnchorParts(spark, memoIdx, phrases, capped,
+          cf = cf)._1,
+        "capped phrase starts")
+      same(
+        Positional.snippetOn(spark, g.postings, phrases, g.wbN, cf = cf),
+        Positional.snippetOn(spark, memoIdx, phrases, cf = cf),
+        "snippets")
+      val pt = Seq(
+        (0L, Seq("a", "b", "a", "x", "y")),
+        (50L, Seq("p", "p", "q", "r"))).toDF("qid", "toks")
+      same(
+        Positional.proximityOn(spark, g.postings, pt, g.wbN),
+        Positional.proximityOn(spark, memoIdx, pt),
+        "proximity pairs")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
   }
 }

@@ -44,30 +44,6 @@ class PqSpec extends SparkSpec {
     assert(rec >= 0.4, f"PQ recall@5 collapsed: $rec%.3f")
   }
 
-  test("pruned serving-cell scan equals the memoized index filtered (r18)") {
-    // the batch serving pass routes its candidate scan through
-    // pqServingCells (literal partition filters on the cell-partitioned
-    // staged artifact) once the quantizer clears PqPruneMinCells; this
-    // pins the routes row-for-row equal at ANY cell count, so the gate
-    // corpora — which exercise only the memoized route — still prove
-    // the pruned one
-    assume(present, s"$dir not present")
-    import spark.implicits._
-    val full = Similarity.pqServingIndex(spark, dir)
-    val cells = full.select($"cell").distinct()
-      .as[Long].collect().sorted.take(3).toSeq
-    val pruned = Similarity.pqServingCells(spark, dir, cells)
-      .select($"vec_id", $"cell", $"norm2", $"codes", $"embedding")
-    val memo = full.filter($"cell".isin(cells: _*))
-      .select($"vec_id", $"cell", $"norm2", $"codes", $"embedding")
-    assert(pruned.schema.map(f => (f.name, f.dataType)) ==
-      memo.schema.map(f => (f.name, f.dataType)),
-      "pruned scan must read back the build's exact schema")
-    assert(pruned.exceptAll(memo).isEmpty && memo.exceptAll(pruned).isEmpty,
-      "pruned serving-cell rows must equal the memoized index filtered")
-    assert(pruned.count() > 0, "probed cells must hold rows at this SF")
-  }
-
   test("on a clustered corpus (the realistic embedding shape) recall is high") {
     // the gate corpus's vectors are near-uniform, so every ANN tier's
     // recall tracks its scanned fraction — the honest worst case
